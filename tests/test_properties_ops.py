@@ -135,9 +135,17 @@ def test_scd2_matches_reference(spark, changes):
 # -- stats-gate soundness (round 4) -----------------------------------------
 
 
+def _stats_prove_no_match(t, snap, cond) -> bool:
+    """The no-op DML gate as delete_where/update_where apply it: the
+    predicate yields stats-extractable conjuncts and the scan planner
+    keeps no batch for them."""
+    conjs = t._extract_simple_conjuncts(cond)
+    return bool(conjs) and not t._plan(snap, conjs)[0]
+
+
 def test_noop_dml_gate_soundness(spark, tmp_path):
     """THE property the no-op DML short-circuit must never break: when
-    _no_batch_may_match says skip, the predicate really matches nothing.
+    the planner prunes every batch, the predicate really matches nothing.
     Sweep the comparison grid around the table's [min, max] bounds for
     both string and Column predicates, cross-checking against a real
     scan every time the gate fires — and assert it DOES fire for clearly
@@ -187,7 +195,7 @@ def test_noop_dml_gate_soundness(spark, tmp_path):
             }[op]
         else:
             cond = cond_str
-        if t._no_batch_may_match(snap, cond):
+        if _stats_prove_no_match(t, snap, cond):
             fired.append(cond_str)
             n = t.read().where(F.expr(cond_str)).count()
             assert n == 0, f"gate skipped {cond_str!r} but {n} rows match"
@@ -307,7 +315,7 @@ def test_dml_not_noop_on_stats_less_file(spark, tmp_path):
         json.dump(m, f)
 
     snap = t._load()
-    assert not t._no_batch_may_match(snap, "id = 5"), (
+    assert not _stats_prove_no_match(t, snap, "id = 5"), (
         "gate must decline: a stats-less file may hold id=5"
     )
     assert t.read().where("id = 5").count() == 1
@@ -315,7 +323,7 @@ def test_dml_not_noop_on_stats_less_file(spark, tmp_path):
     assert t.read().where("id = 5").count() == 0
     # the optimization still exists for clearly out-of-bounds predicates
     # on a fully-covered column? id is now uncovered — but name still is
-    assert t._no_batch_may_match(t._load(), "name = 'zzz'")
+    assert _stats_prove_no_match(t, t._load(), "name = 'zzz'")
 
 
 # -- partition evolution: model-based sequence property ---------------------

@@ -461,39 +461,6 @@ def test_merge_source_broadcast_hint_and_equivalence(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_unpartitioned_dml_noop_probe_free(spark, tmp_path):
-    """The unpartitioned COW no-op detection now rides the rewrite's own
-    write action (Observation + rollback): a no-match DELETE/UPDATE that
-    passes the stats gate must keep the version AND leave no stray batch
-    directory behind."""
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    rows = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        ["id", "cat", "amt"],
-    )
-    t = cat.table("db", "np")
-    t.create(rows.schema)
-    t.append(rows)
-    v1 = t._load().version
-    n_dirs = len(os.listdir(t.data_dir))
-    # stats-inconclusive no-match: 'c' is inside the [a,b]..? use a
-    # predicate footer stats cannot refuse: cat = 'ab' sorts between
-    # 'a' and 'b', so the batch min/max gate passes but nothing matches
-    assert t.delete_where("cat = 'ab'") == v1
-    assert t.update_where("cat = 'ab'", {"amt": "amt + 1"}) == v1
-    assert t._load().version == v1
-    assert len(os.listdir(t.data_dir)) == n_dirs  # rollback removed the dirs
-    # and a matching DML still commits exactly as before
-    v2 = t.delete_where("cat = 'b'")
-    assert v2 == v1 + 1
-    assert t.read().count() == 2
-    v3 = t.update_where("cat = 'a'", {"amt": "amt + 5"})
-    assert v3 == v2 + 1
-    got = {r["id"]: r["amt"] for r in t.read().collect()}
-    assert got == {1: 15.0, 3: 35.0}
-
-
 def test_connected_components_one_checkpoint_per_round(spark):
     """Exactly ONE checkpoint action per propagation round — neither a
     fused multi-round plan (tried in r13 and measured WORSE: the inner

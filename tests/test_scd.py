@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_iceberg_schema_evolution_spark.operators.scd import scd2_apply
+from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
 
 
 def _hist(spark, rows):
@@ -165,3 +166,47 @@ def test_scd2_merge_incremental(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_scd2_broadcast_bound_uses_pre_hit_frame(spark, tmp_path):
+    """An abnormal dimension (external writer: committed
+    (keys, valid_from) with NO current row) makes `applied` undercount
+    first_ts keys; the close-merge broadcast decision must bound from
+    the pre-__hit frame's observed count instead."""
+    from unittest import mock
+
+    from spark_iceberg_schema_evolution_spark import tables as tables_mod
+    from spark_iceberg_schema_evolution_spark.operators.scd import scd2_merge
+
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    t = cat.table("db", "dim")
+    base = spark.createDataFrame(
+        [(1, "x", 100)], ["k", "attr", "ts"]
+    )
+    scd2_merge(t, base, keys=["k"], change_ts="ts")
+    # external writer leaves a committed-but-not-current tuple for a
+    # key with NO current row: (k=9, valid_from=50, is_current=false)
+    t.append(
+        spark.createDataFrame(
+            [(9, "z", 50, 60, False)],
+            ["k", "attr", "valid_from", "valid_to", "is_current"],
+        )
+    )
+    # replaying (9, 50): __hit=1 but __late=False (no current row), so
+    # chained filters it (applied == 0) while first_ts still keys it
+    changes = spark.createDataFrame([(9, "z", 50)], ["k", "attr", "ts"])
+    captured = {}
+    real = t.merge_into
+
+    def spy(*a, **k):
+        captured.update(k)
+        return real(*a, **k)
+
+    with mock.patch.object(
+        tables_mod, "MERGE_BROADCAST_ROWS", 0
+    ), mock.patch.object(t, "merge_into", spy):
+        rep = scd2_merge(t, changes, keys=["k"], change_ts="ts")
+    assert rep["applied"] == 0  # the undercounting quantity
+    # bound from the pre-__hit frame (1 row) vs ceiling 0: no broadcast
+    assert captured.get("source_broadcast") is False
