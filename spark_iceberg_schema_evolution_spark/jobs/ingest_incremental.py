@@ -133,6 +133,11 @@ def ingest_increment(spark, args) -> dict:
             num_hashes=args.num_hashes,
             num_bands=args.num_bands,
         )
+        # materialize the deduplicated batch once: near-dedup's
+        # candidates, its dropped ids and the kept count below would
+        # otherwise each rerun the staging scan, the exact_dedup window
+        # and the md5 over the corpus text
+        batch = batch.localCheckpoint(eager=True)
         kept, dropped = incremental_near_dedup(
             batch,
             corpus.read(),

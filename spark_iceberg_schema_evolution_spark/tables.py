@@ -3554,7 +3554,10 @@ class LakehouseTable:
         in the later snapshot but not the earlier one. Rewritten batches
         (MERGE/DELETE/UPDATE/compact rewrite partitions) surface as their
         new batch's rows; this is append-level CDC, matching Iceberg's
-        incremental scan on append-mostly tables."""
+        incremental scan on append-mostly tables. Each batch is scanned
+        through :meth:`_read_batch`: the manifest's file list and recorded
+        reader schema, so orphan files in a batch dir never surface as
+        changes."""
         to_snap = self._load(to_version)
         from_paths = {b["path"] for b in self._load(from_version).batches}
         new_batches = [
@@ -3564,7 +3567,7 @@ class LakehouseTable:
             return self.spark.createDataFrame([], to_snap.schema)
         parts = []
         for b in new_batches:
-            df = self.spark.read.parquet(b["path"])
+            df = self._read_batch(b)
             if b["months"] is not None:
                 df = df.where(
                     F.col(_PART_COL).isin(b["months"])

@@ -799,3 +799,50 @@ def test_dsir_scoring_join_broadcasts_the_model(spark):
     for line in plan.splitlines():
         if "SortMergeJoin" in line:
             assert "__bucket" not in line, line
+
+
+def _codegen_compiles(spark, fn) -> int:
+    """Janino compiles Spark's CodeGenerator made while ``fn`` ran (cache
+    hits are not counted). In local mode driver and executor tasks
+    share one cache, so this counts both."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    fn()
+    return cm.METRIC_COMPILATION_TIME().getCount() - before
+
+
+def _projection(spark, k: int):
+    # the int literal is inlined into the generated code, so each k is a
+    # distinct pipeline no other test compiles
+    return spark.range(1000).select((F.col("id") * k + 7_340_033).alias("v"))
+
+
+def test_session_codegen_cache_confs(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+
+def test_pipeline_at_two_stage_ids_compiles_once(spark):
+    """A union of one pipeline with itself holds it at codegen stages 1
+    and 2. With stage ids out of the class names both stages are the
+    same class, so the union compiles exactly what one copy does."""
+    once = _codegen_compiles(
+        spark, lambda: _projection(spark, 1_000_003).collect()
+    )
+    assert once > 0
+    u = _projection(spark, 1_000_033).union(_projection(spark, 1_000_033))
+    plan = explain.physical_plan(u)
+    assert "*(1) Project" in plan and "*(2) Project" in plan, plan
+    assert _codegen_compiles(spark, u.collect) == once
+
+
+def test_codegen_cache_outlives_a_hundred_pipelines(spark):
+    """Spark's default cache holds 100 classes, fewer than one
+    corpus_ingest night generates. After 119 more distinct pipelines
+    (at least that many classes) the first one still runs without a
+    compile."""
+    first = _projection(spark, 2_000_003)
+    assert _codegen_compiles(spark, first.collect) > 0
+    for k in range(1, 120):
+        _projection(spark, 2_000_003 + k).collect()
+    assert _codegen_compiles(spark, first.collect) == 0

@@ -341,6 +341,30 @@ def test_changes_incremental_read(spark, catalog):
     assert got12 == [3]
 
 
+def test_changes_ignore_orphan_files(spark, catalog):
+    """changes() plans each new batch from its manifest, like read(): a
+    stray copy of a data file in the newest batch dir (a failed task
+    retry's leftover) must not surface as changed rows."""
+    catalog.write_evolving(spark.range(10).toDF("id"), "db", "incorph")
+    t = catalog.table("db", "incorph")
+    v1 = t._load().version
+    t.append(spark.range(10, 15).toDF("id"))
+    batch = t._load().batches[-1]["path"]
+    live = max(
+        (f for f in os.listdir(batch) if f.endswith(".parquet")),
+        key=lambda f: os.path.getsize(os.path.join(batch, f)),
+    )
+    shutil.copy(
+        os.path.join(batch, live),
+        os.path.join(batch, "part-99999-orphan.c000.parquet"),
+    )
+    assert t.read().count() == 15
+    assert sorted(r.id for r in t.changes(v1).collect()) == list(range(10, 15))
+    t.commit_offset("etl", v1)
+    df, _ = t.consume_changes("etl")
+    assert df.count() == 5
+
+
 def test_rollback_preserves_history(spark, catalog):
     df1 = spark.createDataFrame([(1,)], ["id"])
     df2 = spark.createDataFrame([(2,)], ["id"])
