@@ -44,18 +44,6 @@ class EngineConfig:
         default_factory=lambda: os.environ.get("ENGINE_DRIVER_MEMORY", "8g")
     )
     ui_enabled: bool = False
-    # spark.sql.sources.parallelPartitionDiscovery.threshold: above this
-    # many paths, Spark launches a distributed JOB just to list files.
-    # The engine plans scans from manifest file lists (O(100) paths on a
-    # fast filesystem), where a listing job costs ~0.2 s of scheduling to
-    # replace microseconds of driver stats. Raised to 4096 and
-    # parameterized: deployments whose warehouse sits on a slow object
-    # store with very wide tables can lower it back via env.
-    parallel_listing_threshold: int = field(
-        default_factory=lambda: int(
-            os.environ.get("ENGINE_LISTING_THRESHOLD", "4096")
-        )
-    )
 
     def __post_init__(self) -> None:
         for name in ("app_name", "master", "warehouse", "catalog_name"):
@@ -64,7 +52,3 @@ class EngineConfig:
                 raise ValueError(f"EngineConfig.{name} must be a non-empty string")
         if self.shuffle_partitions < 1:
             raise ValueError("EngineConfig.shuffle_partitions must be >= 1")
-        if self.parallel_listing_threshold < 1:
-            raise ValueError(
-                "EngineConfig.parallel_listing_threshold must be >= 1"
-            )

@@ -846,7 +846,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    order_by_degree: bool = True,
 ) -> DataFrame:
     """Exact per-node triangle count on the UNDIRECTED simple graph
     (direction and parallel edges collapse; self-loops drop) — the
@@ -860,19 +859,15 @@ def triangle_count(
     materialization, so a high-degree hub costs O(deg^2) wedge rows
     but no single-task blowup (wedges shuffle by their closing key).
 
-    ``order_by_degree=True`` (the default) orients edges in the
-    standard degree order (Suri & Vassilvitskii 2011 "Counting
-    triangles and the curse of the last reducer"): every edge points
-    from its lower-(degree, id) endpoint to the higher, and wedges
-    pivot at the LOWEST-degree vertex — a degree-d hub then emits
-    wedges only for its higher-ranked neighbors, collapsing the hub's
-    d^2 term to (its out-degree)^2 where out-degree is bounded by the
-    graph's degeneracy (15.3x on the skewed 1M-edge probe graph:
-    tools/probe_r9_graph.py, PROBES_r09). Output is IDENTICAL either
-    way (equality-tested; the per-node counts don't depend on wedge
-    orientation), so the scale-safe orientation is the default;
-    ``order_by_degree=False`` keeps the simpler id-order plan (one
-    fewer degree join) for small known-unskewed graphs."""
+    Edges are oriented in the standard degree order (Suri &
+    Vassilvitskii 2011 "Counting triangles and the curse of the last
+    reducer"): every edge points from its lower-(degree, id) endpoint
+    to the higher, and wedges pivot at the LOWEST-degree vertex — a
+    degree-d hub then emits wedges only for its higher-ranked
+    neighbors, collapsing the hub's d^2 term to (its out-degree)^2
+    where out-degree is bounded by the graph's degeneracy. On a skewed
+    1M-edge graph at local[4] this took 19-26 s where the id-ordered
+    wedge plan took 364-372 s, with equal counts."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = (
         e.where(F.col("a") != F.col("b"))
@@ -882,71 +877,51 @@ def triangle_count(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if order_by_degree:
-        # rank(x) = (deg(x), x); orient every canonical edge from the
-        # lower rank to the higher, then build wedges at the low end
-        deg = (
-            und.select(F.col("u").alias("node"))
-            .union(und.select("v"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        du = deg.select(
-            F.col("node").alias("u"), F.col("d").alias("du")
-        )
-        dv = deg.select(
-            F.col("node").alias("v"), F.col("d").alias("dv")
-        )
-        ranked = und.join(du, "u").join(dv, "v")
-        lo_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        oriented = ranked.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-            F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias(
-                "dy"
-            ),
-        ).localCheckpoint(eager=True)
-        wedges = (
-            oriented.alias("l")
-            .join(oriented.alias("r"), F.col("l.x") == F.col("r.x"))
-            .where(
-                (F.col("l.dy") < F.col("r.dy"))
-                | (
-                    (F.col("l.dy") == F.col("r.dy"))
-                    & (F.col("l.y") < F.col("r.y"))
-                )
-            )
-            .select(
-                F.col("l.x").alias("a"),
-                F.col("l.y").alias("b"),
-                F.col("r.y").alias("c"),
+    # rank(x) = (deg(x), x); orient every canonical edge from the
+    # lower rank to the higher, then build wedges at the low end
+    deg = (
+        und.select(F.col("u").alias("node"))
+        .union(und.select("v"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    du = deg.select(
+        F.col("node").alias("u"), F.col("d").alias("du")
+    )
+    dv = deg.select(
+        F.col("node").alias("v"), F.col("d").alias("dv")
+    )
+    ranked = und.join(du, "u").join(dv, "v")
+    lo_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    oriented = ranked.select(
+        F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("x"),
+        F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("y"),
+        F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias(
+            "dy"
+        ),
+    ).localCheckpoint(eager=True)
+    wedges = (
+        oriented.alias("l")
+        .join(oriented.alias("r"), F.col("l.x") == F.col("r.x"))
+        .where(
+            (F.col("l.dy") < F.col("r.dy"))
+            | (
+                (F.col("l.dy") == F.col("r.dy"))
+                & (F.col("l.y") < F.col("r.y"))
             )
         )
-        tris = wedges.join(
-            oriented.select("x", "y"),
-            (F.col("b") == F.col("x")) & (F.col("c") == F.col("y")),
-        ).select("a", "b", "c")
-    else:
-        # wedges (u < v < w sharing vertex v... enumerated as u<v, u<w):
-        # join canonical edges (u,v) x (u,w) with v < w gives each
-        # candidate triangle exactly once as u < v < w
-        e1 = und.select(F.col("u").alias("x"), F.col("v").alias("y"))
-        wedges = (
-            e1.alias("l")
-            .join(e1.alias("r"), F.col("l.x") == F.col("r.x"))
-            .where(F.col("l.y") < F.col("r.y"))
-            .select(
-                F.col("l.x").alias("a"),
-                F.col("l.y").alias("b"),
-                F.col("r.y").alias("c"),
-            )
+        .select(
+            F.col("l.x").alias("a"),
+            F.col("l.y").alias("b"),
+            F.col("r.y").alias("c"),
         )
-        tris = wedges.join(
-            und,
-            (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")),
-        ).select("a", "b", "c")
+    )
+    tris = wedges.join(
+        oriented.select("x", "y"),
+        (F.col("b") == F.col("x")) & (F.col("c") == F.col("y")),
+    ).select("a", "b", "c")
     per_node = (
         tris.select(F.col("a").alias("node"))
         .union(tris.select("b"))

@@ -72,13 +72,8 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
         # manifest-planned scans pass explicit file lists (O(100) local
         # paths); the default threshold of 32 would launch a distributed
         # listing JOB for them — ~0.2 s of job scheduling to replace
-        # microseconds of driver stat calls (r13; parameterized for
-        # deployments where a remote-store listing really is the
-        # bottleneck)
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            str(cfg.parallel_listing_threshold),
-        )
+        # microseconds of driver stat calls (r13)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.ui.showConsoleProgress", "false")
         # compile each generated class once per session (module docstring)
         .config("spark.sql.codegen.cache.maxEntries", "1000")

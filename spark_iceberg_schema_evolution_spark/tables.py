@@ -44,7 +44,7 @@ import os
 import re
 import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -232,21 +232,16 @@ def _dml_replay_deterministic(spark, schema: T.StructType, sqls) -> bool:
 
 
 def _manifest_scan_rows(batches: list[dict]) -> int:
-    """Manifest row-count of a planned scan set (per-file counts,
-    respecting a pruned batch's ``__files`` subset). Any batch written
-    before per-file counts existed returns a large sentinel — unknown
-    size must gate like a big table, never like a small one."""
+    """Manifest row-count of a planned scan set: the rows of each
+    batch's live files (``LakehouseTable._live_files``). Any batch
+    written before per-file counts existed returns a large sentinel —
+    unknown size must gate like a big table, never like a small one."""
     total = 0
     for b in batches:
-        fr = b.get("file_rows")
-        if fr is None:
+        live = LakehouseTable._live_files(b)
+        if live is None:
             return 1 << 62
-        files = b.get("__files")
-        if files is None:
-            total += sum(fr.values())
-        else:
-            rels = {os.path.relpath(f, b["path"]) for f in files}
-            total += sum(n for rel, n in fr.items() if rel in rels)
+        total += sum(live.values())
     return total
 
 
@@ -965,74 +960,47 @@ class LakehouseTable:
                 _PART_COL, F.date_format(F.col(month_of), "yyyy-MM")
             )
             part_cols = [_PART_COL] + part_cols
+        if part_cols and not pre_arranged:
             # cluster rows by partition value before the partitioned write:
             # without this every upstream task writes a file into every
-            # month dir (tasks x months tiny files — the classic lakehouse
-            # small-files sin); with it each month gets O(1) files. The
-            # shuffle width is PINNED to defaultParallelism rather than
-            # left to AQE: AQE coalesces this exchange by byte size, and
-            # for commit-sized batches that collapses the write to ONE
-            # task paying the per-file writer setup (parquet+zstd init,
-            # commit rename) for every partition dir SERIALLY — measured
-            # 1.5s -> 0.52s per 80-month commit (r13). Each month still
-            # hashes wholly into one task, so the one-file-per-month
-            # layout is unchanged at any width; defaultParallelism scales
-            # with the cluster, not the data, which is exactly right here
-            # (a write wants at most all-cores concurrency, and file
-            # sizing is fixed by the month layout, not the task count).
+            # partition dir (tasks x partitions tiny files — the classic
+            # lakehouse small-files sin); with it each month (or bucket)
+            # gets O(1) files. The shuffle width is PINNED to
+            # defaultParallelism rather than left to AQE: AQE coalesces
+            # this exchange by byte size, and for commit-sized batches
+            # that collapses the write to ONE task paying the per-file
+            # writer setup (parquet+zstd init, commit rename) for every
+            # partition dir SERIALLY — measured 1.5s -> 0.52s per
+            # 80-month commit (r13). Each partition value still hashes
+            # wholly into one task, so the one-file-per-month layout is
+            # unchanged at any width; defaultParallelism scales with the
+            # cluster, not the data, which is exactly right here (a write
+            # wants at most all-cores concurrency, and file sizing is
+            # fixed by the partition layout, not the task count).
             # (A sorted compaction arrives pre-range-partitioned — don't
             # destroy its clustering.)
-            if not pre_arranged:
-                width = max(self.spark.sparkContext.defaultParallelism, 1)
-                out = out.repartition(
-                    width, *[F.col(c) for c in part_cols]
-                )
-            # "overwrite", not "error": the claim above created the
-            # (empty) dir, and ErrorIfExists refuses an existing path
-            out.write.partitionBy(*part_cols).mode("overwrite").parquet(
-                batch_dir
-            )
-            if obs is not None:
-                self._raise_constraint_violations(cons, obs.get, batch_dir)
+            width = max(self.spark.sparkContext.defaultParallelism, 1)
+            out = out.repartition(width, *[F.col(c) for c in part_cols])
+        # "overwrite", not "error": the claim above created the (empty)
+        # dir, and ErrorIfExists refuses an existing path
+        writer = out.write.mode("overwrite")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(batch_dir)
+        if obs is not None:
+            self._raise_constraint_violations(cons, obs.get, batch_dir)
+        months = None
+        if month_of:
             months = sorted(
                 d.split("=", 1)[1]
                 for d in os.listdir(batch_dir)
                 if d.startswith(f"{_PART_COL}=")
             )
-            stats, file_stats, file_rows = self._footer_stats(batch_dir)
-            meta = {
-                "path": batch_dir,
-                "months": months,
-                "spec_col": month_of,
-                "renames_at": renames_at,
-                "seq": n,
-                "stats": stats,
-                "file_stats": file_stats,
-                "file_rows": file_rows,
-                "read_schema": self._reader_schema(out.schema, part_cols),
-            }
-            if bucket_meta:
-                meta["bucket_spec"] = bucket_meta
-            return meta
-        if part_cols:
-            # bucket-only layout: one shuffle on the bucket expression so
-            # each bucket dir gets O(1) files (same small-files + pinned-
-            # width reasoning as the month path above)
-            if not pre_arranged:
-                width = max(self.spark.sparkContext.defaultParallelism, 1)
-                out = out.repartition(width, F.col(_BUCKET_COL))
-            out.write.partitionBy(*part_cols).mode("overwrite").parquet(
-                batch_dir
-            )
-        else:
-            out.write.mode("overwrite").parquet(batch_dir)
-        if obs is not None:
-            self._raise_constraint_violations(cons, obs.get, batch_dir)
         stats, file_stats, file_rows = self._footer_stats(batch_dir)
         meta = {
             "path": batch_dir,
-            "months": None,
-            "spec_col": None,
+            "months": months,
+            "spec_col": month_of or None,
             "renames_at": renames_at,
             "seq": n,
             "stats": stats,
@@ -1451,38 +1419,65 @@ class LakehouseTable:
                 name = new
         return name
 
+    @staticmethod
+    def _live_files(
+        b: dict,
+        snap: Snapshot | None = None,
+        months: list[str] | None = None,
+    ) -> dict[str, int] | None:
+        """The live data files of batch entry ``b`` with their row
+        counts, ``{batch-relative path: rows}`` in path order — the one
+        rule every manifest reader applies. It starts from the
+        manifest's ``file_rows``, so the manifest, never a directory
+        listing, decides which files are live. A month batch keeps only
+        the files under a ``__p_month=`` dir its month list names: a
+        DML-trimmed batch is live for a month subset, and a file outside
+        every month dir is not live either (no engine writer makes one,
+        and the scan's partition filter could never keep its rows). A
+        planner ``__files`` subset narrows the set further; ``months``
+        scopes it to those months (``snap`` is then required). None
+        where metadata cannot answer: a manifest without per-file
+        counts, or a ``months`` scope on a batch whose month list does
+        not index the current spec (:meth:`_month_prunable`)."""
+        fr = b.get("file_rows")
+        if fr is None or (
+            months is not None
+            and not LakehouseTable._month_prunable(b, snap)
+        ):
+            return None
+        live = b["months"]
+        if live is not None and months is not None:
+            live = [m for m in live if m in months]
+        prefixes = (
+            None if live is None else tuple(f"{_PART_COL}={m}/" for m in live)
+        )
+        picked = (
+            {os.path.relpath(f, b["path"]) for f in b["__files"]}
+            if "__files" in b
+            else None
+        )
+        return {
+            rel: fr[rel]
+            for rel in sorted(fr)
+            if (
+                prefixes is None
+                or rel.replace(os.sep, "/").startswith(prefixes)
+            )
+            and (picked is None or rel in picked)
+        }
+
     def _read_batch(self, b: dict) -> DataFrame:
-        """Scan exactly the files the manifest lists for a batch —
-        either the skip-scan subset ("__files") or the full recorded
-        file set (basePath keeps hive partition-column discovery
-        working either way). Planning from the manifest, never from a
-        directory listing, is an Iceberg correctness property: files a
-        crashed or speculative writer left in the dir (orphans, until
-        remove_orphan_files reclaims them) must not leak into query
-        results. Dir-scan remains only as the fallback for manifests
-        that predate per-file tracking."""
-        files = b.get("__files")
-        if not files:
-            fr = b.get("file_rows")
-            if fr:
-                # the manifest's month list is authoritative (same rule
-                # as _prune_files): a DML-trimmed batch's dead-month
-                # files are not part of the plan — and may already be
-                # physically reclaimed by remove_orphan_files
-                pref = (
-                    tuple(f"{_PART_COL}={m}/" for m in b["months"])
-                    if b["months"] is not None
-                    else None
-                )
-                files = [
-                    os.path.join(b["path"], rel)
-                    for rel in sorted(fr)
-                    if pref is None
-                    or rel.replace(os.sep, "/").startswith(pref)
-                    or not rel.replace(os.sep, "/").startswith(
-                        f"{_PART_COL}="
-                    )
-                ]
+        """Scan exactly the batch's live files (:meth:`_live_files`:
+        the manifest's file list, cut to its month list and to a
+        skip-scan ``__files`` subset; basePath keeps hive
+        partition-column discovery working). Planning from the
+        manifest, never from a directory listing, is an Iceberg
+        correctness property: files a crashed or speculative writer
+        left in the dir (orphans, until remove_orphan_files reclaims
+        them) must not leak into query results. Dir-scan remains only
+        as the fallback for manifests that predate per-file tracking."""
+        live = self._live_files(b)
+        files = [os.path.join(b["path"], rel) for rel in live] if live else None
         rs = b.get("read_schema")
         key = (
             self.spark.sparkContext.applicationId,
@@ -1788,27 +1783,18 @@ class LakehouseTable:
         pruning — the point-lookup path stats can't provide, since
         hash-bucketed key values span the full [min,max] in every file).
         None = the whole batch is skippable; a batch without per-file
-        manifest entries passes through unchanged (batch-level
-        granularity only)."""
-        fstats = b.get("file_stats") or {}
-        universe = b.get("file_rows") or fstats
-        if not universe:
+        row counts passes through unchanged (batch-level granularity
+        only). Only live files (:meth:`_live_files`) are candidates:
+        the files of months a DML trimmed away leave the plan, not just
+        the row filter."""
+        if not b.get("file_rows"):
             return b
-        live = (
-            tuple(f"{_PART_COL}={m}/" for m in b["months"])
-            if b["months"] is not None
-            else None
-        )
+        fstats = b.get("file_stats") or {}
         buckets = self._bucket_allowed(b, snap, filters)
         bloom_tests = self._bloom_tests(b, snap, filters)
         keep = []
-        for rel in universe:
-            # a DML-trimmed batch stays live for a month SUBSET: files of
-            # dropped months are dead — exclude them from the plan, not
-            # just from the row filter
+        for rel in self._live_files(b):
             posix = rel.replace(os.sep, "/")
-            if live is not None and not posix.startswith(live):
-                continue
             if buckets is not None:
                 k = self._rel_bucket(posix)
                 if k is not None and k not in buckets:
@@ -1838,12 +1824,9 @@ class LakehouseTable:
             keep.append(rel)
         if not keep:
             return None
-        if len(keep) == len(universe):
+        if len(keep) == len(b["file_rows"]):
             return b
-        return {
-            **b,
-            "__files": [os.path.join(b["path"], r) for r in sorted(keep)],
-        }
+        return {**b, "__files": [os.path.join(b["path"], r) for r in keep]}
 
     @staticmethod
     def _rel_bucket(posix_rel: str) -> int | None:
@@ -2136,11 +2119,14 @@ class LakehouseTable:
     def row_count(
         self, version: int | None = None, months: list[str] | None = None
     ) -> int:
-        """Metadata-only COUNT(*): sums the manifest's per-file row
-        counts for live months — no data file is opened (Iceberg's
-        metadata-table count path; at 100 TB this is the difference
-        between O(manifest) and a full scan). Batches whose manifests
-        predate row-count collection fall back to a scan.
+        """Metadata-only COUNT(*): sums the row counts of the live files
+        (:meth:`_live_files`, the planner's rule) — no data file is
+        opened (Iceberg's metadata-table count path; at 100 TB this is
+        the difference between O(manifest) and a full scan). Batches
+        metadata cannot answer for (manifests that predate row-count
+        collection, or a foreign-layout batch under a ``months`` scope,
+        which only the scan's row-level month filter can count) fall
+        back to a scan.
 
         Live EQUALITY-delete files force a real count (their effect
         depends on data values — Iceberg applies the same rule). Live
@@ -2156,33 +2142,12 @@ class LakehouseTable:
         legacy = []
         live_files: list[str] = []
         for b in snap.batches:
-            fr = b.get("file_rows")
-            if fr is None or (
-                months is not None and not self._month_prunable(b, snap)
-            ):
-                # no per-file counts, or a foreign-layout batch under a
-                # month filter (partition evolution): only a scan with the
-                # row-level month filter can answer — route to the scan
-                # fallback below
+            live = self._live_files(b, snap, months)
+            if live is None:
                 legacy.append(b)
                 continue
-            if b["months"] is None:
-                if months is None:
-                    total += sum(fr.values())
-                    live_files += [
-                        os.path.join(b["path"], rel) for rel in fr
-                    ]
-            else:
-                live = (
-                    b["months"]
-                    if months is None
-                    else [m for m in b["months"] if m in months]
-                )
-                prefixes = tuple(f"{_PART_COL}={m}/" for m in live)
-                for rel, n_rows in fr.items():
-                    if rel.replace(os.sep, "/").startswith(prefixes):
-                        total += n_rows
-                        live_files.append(os.path.join(b["path"], rel))
+            total += sum(live.values())
+            live_files += [os.path.join(b["path"], rel) for rel in live]
         if legacy:
             # pre-row-count manifests can't join the metadata fast path
             # when deletes are live (their files aren't in live_files)
@@ -2576,7 +2541,6 @@ class LakehouseTable:
         self,
         source: DataFrame,
         on: list[str],
-        partition_keys_immutable: bool = False,
         matched_update: dict | str | None = "all",
         matched_condition=None,
         matched_delete_where=None,
@@ -2662,11 +2626,7 @@ class LakehouseTable:
         The matched-month discovery is a key+month column-pruned scan of
         the target semi-joined to the distinct source keys; only the
         distinct month strings come back to the driver (metadata-bounded,
-        like Iceberg's planning phase). Callers whose merge keys NEVER
-        change partition (e.g. the partition ts is part of the key, or is
-        immutable by contract) pass ``partition_keys_immutable=True`` to
-        skip that scan — the Iceberg-style fast path that plans from
-        source months alone."""
+        like Iceberg's planning phase)."""
         snap = self._load()
         schema = snap.schema
         if evolve:
@@ -2717,26 +2677,24 @@ class LakehouseTable:
             keep_batches, merge_carry = [], None
         elif mo:
             month_expr = F.date_format(F.col(mo), "yyyy-MM")
-            month_probe = source.select(month_expr.alias("__m"))
-            if not partition_keys_immutable:
-                # source months and matched-target months come back in
-                # ONE probe job (r13): both are tiny distinct month
-                # strings, and collecting them separately paid a second
-                # full job scheduling round-trip per merge
-                # semi probes read key membership only, so under the
-                # broadcast assertion the build is the full source (one
-                # reusable broadcast, no distinct exchange — r14)
-                src_keys = (
-                    F.broadcast(source)
-                    if source_broadcast
-                    else source.select(*on).distinct()
-                )
-                month_probe = month_probe.unionByName(
-                    self.read()
-                    .select(*on, month_expr.alias("__m"))
-                    .join(src_keys, on, "left_semi")
-                    .select("__m")
-                )
+            # source months and matched-target months come back in ONE
+            # probe job (r13): both are tiny distinct month strings, and
+            # collecting them separately paid a second full job
+            # scheduling round-trip per merge. Semi probes read key
+            # membership only, so under the broadcast assertion the
+            # build is the full source (one reusable broadcast, no
+            # distinct exchange — r14)
+            src_keys = (
+                F.broadcast(source)
+                if source_broadcast
+                else source.select(*on).distinct()
+            )
+            month_probe = source.select(month_expr.alias("__m")).unionByName(
+                self.read()
+                .select(*on, month_expr.alias("__m"))
+                .join(src_keys, on, "left_semi")
+                .select("__m")
+            )
             src_months = sorted(
                 {r[0] for r in month_probe.distinct().collect()}
             )
@@ -3554,33 +3512,16 @@ class LakehouseTable:
         in the later snapshot but not the earlier one. Rewritten batches
         (MERGE/DELETE/UPDATE/compact rewrite partitions) surface as their
         new batch's rows; this is append-level CDC, matching Iceberg's
-        incremental scan on append-mostly tables. Each batch is scanned
-        through :meth:`_read_batch`: the manifest's file list and recorded
-        reader schema, so orphan files in a batch dir never surface as
-        changes."""
+        incremental scan on append-mostly tables. The new batches go
+        through :meth:`_scan` (manifest file lists, so orphan files in a
+        batch dir never surface as changes) with no delete file applied:
+        the rows a commit added, not what later deletes left of them."""
         to_snap = self._load(to_version)
         from_paths = {b["path"] for b in self._load(from_version).batches}
         new_batches = [
             b for b in to_snap.batches if b["path"] not in from_paths
         ]
-        if not new_batches:
-            return self.spark.createDataFrame([], to_snap.schema)
-        parts = []
-        for b in new_batches:
-            df = self._read_batch(b)
-            if b["months"] is not None:
-                df = df.where(
-                    F.col(_PART_COL).isin(b["months"])
-                ).drop(_PART_COL)
-            df = self._replay_renames(df, b, to_snap)
-            parts.append(
-                self._apply_initial_defaults(
-                    align_schema(df, to_snap.schema, keep_extras=False),
-                    b,
-                    to_snap,
-                )
-            )
-        return union_evolving(parts, target=to_snap.schema)
+        return self._scan(replace(to_snap, deletes=[]), new_batches, None)
 
     # -- checkpointed incremental consumption -------------------------------
 
@@ -3967,26 +3908,20 @@ class LakehouseTable:
 
     def files(self, version: int | None = None) -> list[dict]:
         """Manifest-level file listing (Iceberg's ``files`` metadata
-        table): one dict per live data file with its batch, months
-        scope, row count, and column [min,max] stats — driver-side
-        metadata only, nothing is scanned."""
+        table): one dict per live data file (:meth:`_live_files`) with
+        its batch, row count, and column [min,max] stats — driver-side
+        metadata only, nothing is scanned. A batch whose manifest
+        predates per-file row counts lists no files."""
         snap = self._load(version)
         out = []
         for b in snap.batches:
-            rows = b.get("file_rows") or {}
             stats = b.get("file_stats") or {}
-            names = set(rows) | set(stats)
-            for rel in sorted(names):
-                if b["months"] is not None:
-                    month = rel.replace(os.sep, "/").split("/", 1)[0]
-                    month = month.split("=", 1)[-1]
-                    if month not in b["months"]:
-                        continue
+            for rel, n in (self._live_files(b) or {}).items():
                 out.append(
                     {
                         "file": os.path.join(b["path"], rel),
                         "batch": os.path.basename(b["path"]),
-                        "rows": rows.get(rel),
+                        "rows": n,
                         "stats": stats.get(rel, {}),
                         "content": "data",
                     }
@@ -4017,29 +3952,27 @@ class LakehouseTable:
         snap = self._load(version)
         agg: dict = {}
         for b in snap.batches:
-            fr = b.get("file_rows") or {}
             if b["months"] is None:
+                live = self._live_files(b) or {}
                 slot = agg.setdefault(
                     (None, None), {"rows": 0, "files": 0}
                 )
-                slot["rows"] += sum(fr.values())
-                slot["files"] += len(fr)
+                slot["rows"] += sum(live.values())
+                slot["files"] += len(live)
                 continue
             # group under the spec that WROTE the batch (partition
             # evolution: a foreign-layout batch's months index a different
             # source column — Iceberg's partitions table is per-spec too)
             spec = b.get("spec_col", snap.partition_month_of)
-            for rel, n in fr.items():
-                month = (
-                    rel.replace(os.sep, "/").split("/", 1)[0].split("=", 1)[-1]
-                )
-                if month not in b["months"]:
-                    continue  # trimmed by a partition-scoped DML
+            for month in b["months"]:
+                live = self._live_files({**b, "months": [month]})
+                if not live:
+                    continue
                 slot = agg.setdefault(
                     (spec, month), {"rows": 0, "files": 0}
                 )
-                slot["rows"] += n
-                slot["files"] += 1
+                slot["rows"] += sum(live.values())
+                slot["files"] += len(live)
         return [
             {
                 "spec_col": k[0],
@@ -4567,41 +4500,30 @@ class LakehouseTable:
                 )
                 for r in named.collect()
             }
-        eq = [d for d in snap.deletes if d.get("content") != "pos"]
-        # equality-delete key ranges from the delete files' own footers
-        # (metadata-only, O(delete files))
+        # each equality-delete file's key ranges, from its own footer
+        # (metadata-only, O(delete files)), as the conjunction
+        # lo <= key <= hi over current column names: a batch the
+        # planner's stats test rules out for it holds no deleted key
         eq_ranges = []
-        for d in eq:
+        for d in snap.deletes:
+            if d.get("content") == "pos":
+                continue
             dstats, _f, _r = self._footer_stats(d["path"])
-            eq_ranges.append((d, dstats))
+            conj = []
+            for k in d["keys"]:
+                if k in dstats:
+                    cur = self._current_name(k, d.get("renames_at", 0), snap)
+                    lo, hi = dstats[k]
+                    conj += [(cur, ">=", lo), (cur, "<=", hi)]
+            eq_ranges.append((int(d["seq"]), conj))
 
         def eq_hits(b: dict) -> bool:
-            for d, dstats in eq_ranges:
-                if int(d["seq"]) <= int(b.get("seq", 0)):
-                    continue  # deletes apply to strictly-older batches
-                bstats = b.get("stats") or {}
-                disjoint = False
-                for k in d["keys"]:
-                    cur = self._current_name(
-                        k, d.get("renames_at", 0), snap
-                    )
-                    brange = bstats.get(
-                        self._physical_name(cur, b, snap)
-                    )
-                    drange = dstats.get(k)
-                    if brange is None or drange is None:
-                        continue  # no stats: can't disprove
-                    same_kind = isinstance(
-                        brange[0], str
-                    ) == isinstance(drange[0], str)
-                    if same_kind and (
-                        drange[1] < brange[0] or drange[0] > brange[1]
-                    ):
-                        disjoint = True
-                        break
-                if not disjoint:
-                    return True
-            return False
+            # deletes apply to strictly-older batches (sequence rule)
+            return any(
+                seq > int(b.get("seq", 0))
+                and self._stats_may_match(b, snap, conj)
+                for seq, conj in eq_ranges
+            )
 
         def pos_hits(b: dict) -> bool:
             if not pos_files:
@@ -4715,27 +4637,15 @@ class LakehouseTable:
             s = self._load(v)
             for b in s.batches:
                 live_dirs.add(os.path.abspath(b["path"]))
-                fr = b.get("file_rows")
-                if fr:
-                    # month-aware liveness: a DML-trimmed batch is live
-                    # for a month SUBSET of its physical layout (same
-                    # rule as _prune_files) — its dead-month files count
-                    # as referenced only while an OLDER manifest still
-                    # lists those months, so expire_snapshots ->
-                    # remove_orphan_files reclaims them
-                    pref = (
-                        tuple(f"{_PART_COL}={m}/" for m in b["months"])
-                        if b["months"] is not None
-                        else None
-                    )
+                if b.get("file_rows"):
+                    # the planner's liveness (_live_files): a DML-trimmed
+                    # batch's dead-month files count as referenced only
+                    # while an OLDER manifest still lists those months,
+                    # so expire_snapshots -> remove_orphan_files
+                    # reclaims them
                     live_files.update(
                         os.path.abspath(os.path.join(b["path"], rel))
-                        for rel in fr
-                        if pref is None
-                        or rel.replace(os.sep, "/").startswith(pref)
-                        or not rel.replace(os.sep, "/").startswith(
-                            f"{_PART_COL}="
-                        )
+                        for rel in self._live_files(b)
                     )
                 else:
                     protected.append(os.path.abspath(b["path"]))

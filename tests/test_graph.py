@@ -867,19 +867,14 @@ def test_adamic_adar_default_guard_is_finite(spark):
 @pytest.mark.parametrize("seed,n_nodes,n_draws", [(5, 15, 40), (23, 30, 160)])
 def test_triangle_count_degree_order_identical(spark, seed, n_nodes, n_draws):
     """The degree-ordered orientation (Suri & Vassilvitskii: hubs stop
-    pivoting wedges — the default since round 10) must count the
-    identical per-node triangles as the id-ordered plan, including on
-    skewed graphs with a planted hub."""
-    import inspect
+    pivoting wedges) must count every node's triangles exactly,
+    including on skewed graphs with a planted hub: the reference is a
+    brute-force enumeration of vertex triples."""
+    import itertools
 
     from spark_iceberg_schema_evolution_spark.operators.graph import (
         triangle_count,
     )
-
-    # the scale-safe orientation is the default (r9 probe: 15.3x on
-    # the skewed 1M-edge graph; outputs proven identical below)
-    sig = inspect.signature(triangle_count)
-    assert sig.parameters["order_by_degree"].default is True
 
     rng = np.random.RandomState(seed)
     edges = sorted(
@@ -889,12 +884,15 @@ def test_triangle_count_degree_order_identical(spark, seed, n_nodes, n_draws):
         }
     )
     edges += [(999, i) for i in range(n_nodes)]  # planted hub
+    und = {frozenset(e) for e in edges if e[0] != e[1]}
+    nodes = sorted({x for e in und for x in e})
+    want = {v: 0 for v in nodes}
+    for a, b, c in itertools.combinations(nodes, 3):
+        if {frozenset((a, b)), frozenset((b, c)), frozenset((a, c))} <= und:
+            for v in (a, b, c):
+                want[v] += 1
     df = spark.createDataFrame(edges, "src long, dst long")
-    base = {
-        r["node"]: r["n_triangles"]
-        for r in triangle_count(df, order_by_degree=False).collect()
-    }
-    ordered = {
+    got = {
         r["node"]: r["n_triangles"] for r in triangle_count(df).collect()
     }
-    assert ordered == base
+    assert got == want

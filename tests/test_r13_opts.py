@@ -8,9 +8,6 @@ semantics) fails here, not in a bench run nobody is watching.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import functions as F
 
 from spark_iceberg_schema_evolution_spark.operators.dedup import (
@@ -232,98 +229,6 @@ def test_lit_double_array_sql_sci_notation_parses(spark):
         F.expr(lit_double_array_sql(vals)).alias("a")
     ).head()["a"]
     assert got == vals
-
-
-# --- partitioned-write width pin: layout invariant -------------------------
-
-
-def test_partitioned_write_one_file_per_month(spark, tmp_path):
-    """The r13 pinned-width repartition must keep the one-file-per-month
-    layout (each month hashes wholly into one task at ANY width)."""
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 500")
-    cat.write_evolving(o, "db", "m", partition_month_of="o_orderdate")
-    t = cat.table("db", "m")
-    snap = t._load()
-    [batch] = snap.batches
-    months = batch["months"]
-    files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
-    assert len(files) == len(months)
-    # and the read agrees with the source
-    assert t.read().count() == o.count()
-
-
-# --- scan-construction: recorded reader schema + relation memo -------------
-
-
-def test_recorded_reader_schema_matches_inference(spark, tmp_path):
-    """The write-time ``read_schema`` recorded in the manifest must equal
-    what a fresh schema-inference read of the same batch dir returns —
-    including after a rename, an added column, and with a bucket spec —
-    so passing it explicitly can never change what a scan reads."""
-    from pyspark.sql import types as T
-
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 300")
-    cat.write_evolving(o, "db", "t", partition_month_of="o_orderdate")
-    t = cat.table("db", "t")
-    t.set_bucket_spec("o_orderkey", 4)
-    t.rename_column("o_orderpriority", "prio")
-    t.append(
-        t.read().limit(50).withColumn("extra", F.lit(7).cast("int")),
-        evolve=True,
-    )
-    snap = t._load()
-    for b in snap.batches:
-        rs = b.get("read_schema")
-        assert rs is not None
-        inferred = spark.read.option("basePath", b["path"]).parquet(
-            b["path"]
-        ).schema
-        recorded = T.StructType.fromJson(rs)
-        assert [(f.name, f.dataType) for f in recorded.fields] == [
-            (f.name, f.dataType) for f in inferred.fields
-        ], f"batch {b['path']}: recorded {recorded} != inferred {inferred}"
-    # and the table reads consistently end-to-end
-    out = t.read()
-    assert out.count() == o.count() + 50
-    assert "prio" in out.columns and "extra" in out.columns
-
-
-def test_scan_relation_memo_reuses_and_stays_correct(spark, tmp_path):
-    """Two reads of the same immutable batch share one cached relation;
-    a DML that trims the batch produces a DIFFERENT file list (new key)
-    and reads the post-DML state correctly."""
-    from spark_iceberg_schema_evolution_spark import tables as MT
-
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 300")
-    cat.write_evolving(o, "db", "t", partition_month_of="o_orderdate")
-    t = cat.table("db", "t")
-    snap = t._load()
-    [b] = snap.batches
-    r1 = t._read_batch(b)
-    r2 = t._read_batch(b)
-    assert r1 is r2  # memo hit: identical relation object
-    n_before = t.read().count()
-    assert n_before == o.count()
-    # self-join through the shared relation must still work (Spark
-    # deduplicates a relation appearing twice in one plan)
-    a, bb = t.read().alias("a"), t.read().alias("b")
-    j = a.join(
-        bb, F.col("a.o_orderkey") == F.col("b.o_orderkey"), "inner"
-    )
-    assert j.count() == n_before
-    # DML: the rewritten batch is a new dir; reads see the new state
-    t.delete_where("o_orderstatus = 'F'")
-    kept = t.read()
-    assert kept.where("o_orderstatus = 'F'").count() == 0
-    assert kept.count() == o.where("o_orderstatus <> 'F'").count()
-    # cache stays bounded
-    assert len(MT._SCAN_RELATION_CACHE) <= MT._SCAN_RELATION_CACHE_MAX
 
 
 # --- diff(): recorded-DML predicate replay ---------------------------------

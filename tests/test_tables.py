@@ -6,18 +6,21 @@ DF to its own schema by accident, SURVEY §5.1)."""
 from __future__ import annotations
 
 import datetime
+import glob
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from spark_iceberg_schema_evolution_spark.queries import load
 from spark_iceberg_schema_evolution_spark.sources.csv_evolving import ingest_evolving_csvs
 from spark_iceberg_schema_evolution_spark.sources.fixtures import generate_csv_files
 from spark_iceberg_schema_evolution_spark.tables import (
     LakehouseCatalog,
     LakehouseTable,
 )
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture()
@@ -1948,6 +1951,58 @@ def test_remove_orphans_after_expire_reclaims_dead_months(spark, catalog):
     assert {r.id for r in t.read().collect()} == set(range(0, 100, 2))
 
 
+def test_one_live_file_rule_behind_every_manifest_reader(spark, catalog):
+    """A COW delete trims the older batch of a month-partitioned table to
+    fewer months. The scan, the metadata count, files(), partitions() and
+    the planner must agree on its live files; a parquet file outside
+    every month dir of a month batch is not live for any of them; and
+    reclaiming the dead files leaves read() unchanged."""
+    import shutil
+
+    catalog.write_evolving(
+        _mk_part(
+            spark, [(i, f"2024-{1 + i % 3:02d}-10", i) for i in range(90)]
+        ),
+        "db", "lr", partition_month_of="ts",
+    )
+    t = catalog.table("db", "lr")
+    t.append(_mk_part(spark, [(100 + i, "2024-03-20", i) for i in range(10)]))
+    older = t._load().batches[0]
+    t.delete_where(F.col("id") == 1)  # a 2024-02 row
+    [trimmed] = [b for b in t._load().batches if b["path"] == older["path"]]
+    assert trimmed["months"] == ["2024-01", "2024-03"]
+    dead_dir = os.path.abspath(
+        os.path.join(older["path"], "__p_month=2024-02")
+    )
+    assert os.path.isdir(dead_dir)
+    # a stray copy of a live file at the batch root, outside every month dir
+    live_rel = next(r for r in older["file_rows"] if "2024-01" in r)
+    stray = os.path.abspath(os.path.join(older["path"], "stray.parquet"))
+    shutil.copy(os.path.join(older["path"], live_rel), stray)
+
+    n = t.read().count()
+    assert n == 99
+    assert t.row_count() == n
+    for m in ["2024-01", "2024-02", "2024-03"]:
+        assert t.row_count(months=[m]) == t.read(months=[m]).count()
+    files = t.files()
+    assert sum(f["rows"] for f in files) == n
+    assert sum(p["rows"] for p in t.partitions()) == n
+    assert t.plan_scan([])["files_scanned"] == len(files)
+    listed = {os.path.abspath(f["file"]) for f in files}
+    assert stray not in listed
+    assert not any(f.startswith(dead_dir + os.sep) for f in listed)
+
+    before = sorted(t.read().collect())
+    t.expire_snapshots(keep_last=1)
+    removed = t.remove_orphan_files(older_than_s=0)
+    assert stray in removed
+    dead = [p for p in removed if p != stray]
+    assert any(p.endswith(".parquet") for p in dead)
+    assert all(p.startswith(dead_dir + os.sep) for p in dead)
+    assert sorted(t.read().collect()) == before
+
+
 def test_remove_orphans_protects_delete_files_and_sql_call(spark, catalog):
     df = spark.range(40).select(
         F.col("id"), (F.col("id") % 5).alias("k")
@@ -2885,3 +2940,95 @@ def test_nightly_ingest_diff_span_scoped(spark, catalog):
         set(range(100, 150)) | set(range(200, 250))
     )
     assert d.where("_change_type = 'D'").count() == 0
+
+
+# --- partitioned-write width pin: layout invariant -------------------------
+
+
+def test_partitioned_write_one_file_per_month(spark, tmp_path):
+    """The r13 pinned-width repartition must keep the one-file-per-month
+    layout (each month hashes wholly into one task at ANY width)."""
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 500")
+    cat.write_evolving(o, "db", "m", partition_month_of="o_orderdate")
+    t = cat.table("db", "m")
+    snap = t._load()
+    [batch] = snap.batches
+    months = batch["months"]
+    files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
+    assert len(files) == len(months)
+    # and the read agrees with the source
+    assert t.read().count() == o.count()
+
+
+# --- scan-construction: recorded reader schema + relation memo -------------
+
+
+def test_recorded_reader_schema_matches_inference(spark, tmp_path):
+    """The write-time ``read_schema`` recorded in the manifest must equal
+    what a fresh schema-inference read of the same batch dir returns —
+    including after a rename, an added column, and with a bucket spec —
+    so passing it explicitly can never change what a scan reads."""
+    from pyspark.sql import types as T
+
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 300")
+    cat.write_evolving(o, "db", "t", partition_month_of="o_orderdate")
+    t = cat.table("db", "t")
+    t.set_bucket_spec("o_orderkey", 4)
+    t.rename_column("o_orderpriority", "prio")
+    t.append(
+        t.read().limit(50).withColumn("extra", F.lit(7).cast("int")),
+        evolve=True,
+    )
+    snap = t._load()
+    for b in snap.batches:
+        rs = b.get("read_schema")
+        assert rs is not None
+        inferred = spark.read.option("basePath", b["path"]).parquet(
+            b["path"]
+        ).schema
+        recorded = T.StructType.fromJson(rs)
+        assert [(f.name, f.dataType) for f in recorded.fields] == [
+            (f.name, f.dataType) for f in inferred.fields
+        ], f"batch {b['path']}: recorded {recorded} != inferred {inferred}"
+    # and the table reads consistently end-to-end
+    out = t.read()
+    assert out.count() == o.count() + 50
+    assert "prio" in out.columns and "extra" in out.columns
+
+
+def test_scan_relation_memo_reuses_and_stays_correct(spark, tmp_path):
+    """Two reads of the same immutable batch share one cached relation;
+    a DML that trims the batch produces a DIFFERENT file list (new key)
+    and reads the post-DML state correctly."""
+    from spark_iceberg_schema_evolution_spark import tables as MT
+
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").where("o_custkey < 300")
+    cat.write_evolving(o, "db", "t", partition_month_of="o_orderdate")
+    t = cat.table("db", "t")
+    snap = t._load()
+    [b] = snap.batches
+    r1 = t._read_batch(b)
+    r2 = t._read_batch(b)
+    assert r1 is r2  # memo hit: identical relation object
+    n_before = t.read().count()
+    assert n_before == o.count()
+    # self-join through the shared relation must still work (Spark
+    # deduplicates a relation appearing twice in one plan)
+    a, bb = t.read().alias("a"), t.read().alias("b")
+    j = a.join(
+        bb, F.col("a.o_orderkey") == F.col("b.o_orderkey"), "inner"
+    )
+    assert j.count() == n_before
+    # DML: the rewritten batch is a new dir; reads see the new state
+    t.delete_where("o_orderstatus = 'F'")
+    kept = t.read()
+    assert kept.where("o_orderstatus = 'F'").count() == 0
+    assert kept.count() == o.where("o_orderstatus <> 'F'").count()
+    # cache stays bounded
+    assert len(MT._SCAN_RELATION_CACHE) <= MT._SCAN_RELATION_CACHE_MAX
