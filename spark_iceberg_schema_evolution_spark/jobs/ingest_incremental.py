@@ -19,6 +19,9 @@ increment-native pieces so NOTHING rescans the corpus:
   7. optional incremental rollup refresh of a downstream aggregate
   8. ack the consumer offset
 
+Steps 3-5 are ``dedup.ingest_corpus_increment``, the step the streaming
+dedup sink runs per epoch.
+
 Per night the work is O(new data): the corpus contributes only its
 hash column (step 3), its signature store (step 4), and its rollup
 delta (step 7).
@@ -84,11 +87,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 def ingest_increment(spark, args) -> dict:
     from spark_iceberg_schema_evolution_spark.operators.dedup import (
-        exact_dedup,
-        incremental_near_dedup,
-        minhash_signature,
-        reconcile_signature_store,
-        sig_store_props,
+        ingest_corpus_increment,
     )
     from spark_iceberg_schema_evolution_spark.sources.copy_into import (
         copy_into,
@@ -107,82 +106,20 @@ def ingest_increment(spark, args) -> dict:
 
     inc, ack_v = staging.consume_changes(_CONSUMER)
     corpus = cat.table(ns, args.corpus)
-    sigs_t = cat.table(ns, f"{args.corpus}_sigs")
-
-    batch = exact_dedup(inc, text_col=args.text_col)
-    if corpus.exists():
-        existing = corpus.read().select(
-            F.md5(F.col(args.text_col)).alias("__h")
-        )
-        batch = (
-            batch.withColumn("__h", F.md5(F.col(args.text_col)))
-            .join(existing, "__h", "left_anti")
-            .drop("__h")
-        )
-    kept = batch
-    if args.near_dedup is not None and corpus.exists():
-        # heal the signature store FIRST (bootstrap backfill on a
-        # pre-existing corpus; crash-gap re-sign) so candidate
-        # generation always sees a complete, parameter-checked store.
-        report["sigs_backfilled"] = reconcile_signature_store(
-            cat,
-            ns,
-            args.corpus,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            num_hashes=args.num_hashes,
-            num_bands=args.num_bands,
-        )
-        # materialize the deduplicated batch once: near-dedup's
-        # candidates, its dropped ids and the kept count below would
-        # otherwise each rerun the staging scan, the exact_dedup window
-        # and the md5 over the corpus text
-        batch = batch.localCheckpoint(eager=True)
-        kept, dropped = incremental_near_dedup(
-            batch,
-            corpus.read(),
-            corpus_sigs=sigs_t.read(),
-            # index, don't .get(): a property-less store must raise
-            # here, not silently skip the scheme check (ADVICE r11)
-            sigs_scheme=sigs_t.properties()["minhash.scheme"],
-            threshold=args.near_dedup,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            num_hashes=args.num_hashes,
-            num_bands=args.num_bands,
-        )
-        report["near_dup_dropped"] = (
-            dropped.select(args.id_col).distinct().count()
-        )
-    kept = kept.persist()  # counted, appended, and signature-scanned
+    step, kept = ingest_corpus_increment(
+        cat,
+        ns,
+        args.corpus,
+        inc,
+        text_col=args.text_col,
+        id_col=args.id_col,
+        near_threshold=args.near_dedup,
+        num_hashes=args.num_hashes,
+        num_bands=args.num_bands,
+    )
+    report.update(step)
     try:
-        n_kept = kept.count()
-        report["ingested"] = n_kept
-        if n_kept:
-            if corpus.exists():
-                corpus.append(kept)
-            else:
-                cat.write_evolving(kept, ns, args.corpus)
-            if args.near_dedup is not None:
-                new_sigs = minhash_signature(
-                    kept,
-                    id_col=args.id_col,
-                    text_col=args.text_col,
-                    num_hashes=args.num_hashes,
-                )
-                if not sigs_t.exists():
-                    # properties land WITH table creation, before any
-                    # data commit (ADVICE r11): a crash mid-creation
-                    # leaves an empty store reconcile can heal, never
-                    # a property-less one holding signatures
-                    cat.create_namespace(ns)
-                    sigs_t.create(
-                        new_sigs.schema,
-                        properties=sig_store_props(
-                            args.num_hashes, args.num_bands
-                        ),
-                    )
-                sigs_t.append(new_sigs)
+        if step["ingested"]:
             if args.bloom_columns:
                 for c in args.bloom_columns.split(","):
                     corpus.build_bloom_index(c.strip())

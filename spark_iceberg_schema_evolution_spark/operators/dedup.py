@@ -49,11 +49,14 @@ _MINHASH_SCHEME = "2"
 SIGS_SCHEME_IN_PROCESS = "__sigs_built_in_process__"
 
 
-def _check_sigs_scheme(sigs_scheme: str | None, arg_name: str) -> None:
-    """Refuse scheme-mismatched or scheme-less persisted signature
-    stores (see :data:`SIGS_SCHEME_IN_PROCESS` for the contract)."""
-    if sigs_scheme == SIGS_SCHEME_IN_PROCESS:
-        return
+def _check_sig_store(
+    sigs: DataFrame, sigs_scheme: str | None, num_hashes: int, arg_name: str
+) -> None:
+    """Refuse a signature store that would band incompatibly with fresh
+    signatures and so find nothing, silently: a scheme-less or
+    scheme-mismatched persisted store (see :data:`SIGS_SCHEME_IN_PROCESS`
+    for the contract), or one built with a different ``num_hashes``
+    (a one-row limit probe, not a store scan)."""
     if sigs_scheme is None:
         raise ValueError(
             f"{arg_name} is a persisted signature store with NO recorded "
@@ -67,13 +70,25 @@ def _check_sigs_scheme(sigs_scheme: str | None, arg_name: str) -> None:
             "in-process this session by minhash_signature, or rebuild "
             "the store (reconcile_signature_store)"
         )
-    if str(sigs_scheme) != _MINHASH_SCHEME:
+    if (
+        sigs_scheme != SIGS_SCHEME_IN_PROCESS
+        and str(sigs_scheme) != _MINHASH_SCHEME
+    ):
         raise ValueError(
             f"{arg_name} minhash scheme {sigs_scheme!r} != engine scheme "
             f"{_MINHASH_SCHEME!r}: scheme-1 signatures have the same "
             "length but different values, so banding them against "
             "freshly signed docs finds NOTHING — rebuild the signature "
             "store (reconcile_signature_store)"
+        )
+    probe = sigs.select(F.size("signature")).first()
+    if probe is not None and probe[0] != num_hashes:
+        raise ValueError(
+            f"{arg_name} signature length {probe[0]} != num_hashes "
+            f"{num_hashes}: the store was built with different MinHash "
+            "parameters and would band incompatibly (see "
+            "reconcile_signature_store, which records parameters as "
+            "table properties)"
         )
 
 
@@ -180,24 +195,25 @@ def minhash_signature(
     why persistent signature stores carry ``minhash.scheme`` and
     reconcile_signature_store refuses to mix schemes.
 
-    The per-function seed binds through a FACTORY closure: a defaulted
-    second lambda parameter (``lambda h, i=i``) would make F.transform
-    pass the element INDEX into it, collapsing all num_hashes functions
-    into one position-dependent hash."""
+    The num_hashes per-function minima are ONE SQL expression string,
+    parsed once. Built as Python ``F.transform`` lambdas they cost py4j
+    round trips per lambda (pyspark resolves its JVM helper classes by
+    name each time): at K=32 on 10k docs, local[4] on a 4-vCPU VM, 10
+    plan builds took 3.2-3.6 s that way and 0.8-1.0 s parsed, with
+    identical signatures and execution time. Keep the K ``array_min``
+    terms side by side: the nested ``transform(sequence(...), k ->
+    array_min(transform(...)))`` form is value-identical but executed
+    in 13-15 s against 1.4 s on the same input."""
     sh = shingles(normalized_words(text_col), shingle_size)
     keyed = df.select(
         F.col(id_col),
         F.transform(sh, lambda s: F.xxhash64(s)).alias("__shkeys"),
     )
-
-    def min_hash(i: int) -> F.Column:
-        return F.array_min(
-            F.transform(
-                F.col("__shkeys"), lambda h: F.xxhash64(h, F.lit(seed + i))
-            )
-        )
-
-    sig = F.array(*[min_hash(i) for i in range(num_hashes)])
+    minima = ", ".join(
+        f"array_min(transform(__shkeys, h -> xxhash64(h, {seed + i})))"
+        for i in range(num_hashes)
+    )
+    sig = F.expr(f"array({minima})")
     return keyed.select(F.col(id_col), sig.alias("signature"))
 
 
@@ -218,14 +234,11 @@ def _band_hashes(
                     F.xxhash64(
                         F.concat_ws(
                             ",",
-                            F.transform(
-                                F.slice(
-                                    "signature",
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda x: x.cast("string"),
-                            ),
+                            F.slice(
+                                "signature",
+                                b * rows_per_band + 1,
+                                rows_per_band,
+                            ).cast("array<string>"),
                         )
                     )
                     for b in range(num_bands)
@@ -420,10 +433,10 @@ def incremental_near_dedup(
     sigs_scheme: str | None = SIGS_SCHEME_IN_PROCESS,
 ):
     """Near-dedup a NEW ingest batch against an EXISTING corpus without
-    reprocessing the corpus — the fuzzy twin of the exact
-    ``incremental_ingest_dedup``: continuous crawling re-collects
-    lightly-edited copies of pages the corpus already holds, which an
-    exact hash anti-join misses.
+    reprocessing the corpus — the fuzzy twin of the exact hash
+    anti-join in :func:`ingest_corpus_increment`: continuous crawling
+    re-collects lightly-edited copies of pages the corpus already
+    holds, which an exact hash anti-join misses.
 
     The corpus cost model is the point: ``corpus_sigs`` is the
     MATERIALIZED signature store (``minhash_signature`` output,
@@ -471,19 +484,7 @@ def incremental_near_dedup(
             corpus_docs, id_col, text_col, num_hashes, shingle_size, seed
         )
     else:
-        _check_sigs_scheme(sigs_scheme, "corpus_sigs")
-        # a store built with different num_hashes bands differently and
-        # yields ZERO candidates silently — a no-op near-dedup pass is
-        # worse than an error. One-row limit probe, not a corpus scan.
-        probe = corpus_sigs.select(F.size("signature")).first()
-        if probe is not None and probe[0] != num_hashes:
-            raise ValueError(
-                f"corpus_sigs signature length {probe[0]} != "
-                f"num_hashes {num_hashes}: the store was built with "
-                "different MinHash parameters and would band "
-                "incompatibly (see reconcile_signature_store, which "
-                "records parameters as table properties)"
-            )
+        _check_sig_store(corpus_sigs, sigs_scheme, num_hashes, "corpus_sigs")
     new_sigs = minhash_signature(
         new_docs, id_col, text_col, num_hashes, shingle_size, seed
     )
@@ -704,7 +705,6 @@ def corpus_signatures(
     seed: int = 42,
     sigs: DataFrame | None = None,
     sigs_scheme: str | None = SIGS_SCHEME_IN_PROCESS,
-    broadcast_ids: bool = True,
 ) -> DataFrame:
     """(id, signature) MinHash coverage of ``docs``, store-backed:
     with ``sigs`` (a materialized ``minhash_signature`` store) given,
@@ -713,17 +713,15 @@ def corpus_signatures(
     are semi-join-pruned (they would band phantom candidates).
     Without it, every doc is signed (the from-scratch path).
 
-    ``broadcast_ids`` (default on, the measured shape): both membership
-    joins key on a COLUMN-PRUNED id frame — 8 bytes/row — but Catalyst
-    sizes the build side by its SCAN bytes (the signature arrays /
-    document text it will prune later), so without the hint it picks
-    sort-merge joins that shuffle 1M signature arrays and document
-    text, and the r12 probe measured the store path LOSING its ~35%
-    saved signing time to those shuffles (0.96x at 1M docs). With the
-    id frames broadcast, the store scan and the doc scan both stay
-    map-side. 8 bytes/doc broadcasts comfortably to ~100M docs; past
-    that pass ``broadcast_ids=False`` and the fixed-width id shuffle
-    is the floor.
+    Both membership joins BROADCAST their column-pruned id frame (8
+    bytes/row): Catalyst sizes the build side by its SCAN bytes (the
+    signature arrays / document text it will prune later), so without
+    the hint it picks sort-merge joins that shuffle 1M signature arrays
+    and document text, and the r12 probe measured the store path
+    LOSING its ~35% saved signing time to those shuffles (0.96x at 1M
+    docs). With the id frames broadcast, the store scan and the doc
+    scan both stay map-side; 8 bytes/doc broadcasts comfortably to
+    ~100M docs.
 
     Guards (shared with :func:`incremental_near_dedup`): a
     caller-threaded ``sigs_scheme`` must equal the engine scheme
@@ -737,24 +735,13 @@ def corpus_signatures(
         return minhash_signature(
             docs, id_col, text_col, num_hashes, shingle_size, seed
         )
-    _check_sigs_scheme(sigs_scheme, "sigs")
-    probe = sigs.select(F.size("signature")).first()
-    if probe is not None and probe[0] != num_hashes:
-        raise ValueError(
-            f"sigs signature length {probe[0]} != num_hashes "
-            f"{num_hashes}: the store was built with different MinHash "
-            "parameters and would band incompatibly (see "
-            "reconcile_signature_store, which records parameters as "
-            "table properties)"
-        )
-    doc_ids = docs.select(id_col)
-    sig_ids = sigs.select(id_col)
-    if broadcast_ids:
-        doc_ids, sig_ids = F.broadcast(doc_ids), F.broadcast(sig_ids)
+    _check_sig_store(sigs, sigs_scheme, num_hashes, "sigs")
     store = sigs.select(F.col(id_col), F.col("signature")).join(
-        doc_ids, id_col, "left_semi"
+        F.broadcast(docs.select(id_col)), id_col, "left_semi"
     )
-    unsigned = docs.join(sig_ids, id_col, "left_anti")
+    unsigned = docs.join(
+        F.broadcast(sigs.select(id_col)), id_col, "left_anti"
+    )
     return minhash_signature(
         unsigned, id_col, text_col, num_hashes, shingle_size, seed
     ).unionByName(store)
@@ -774,7 +761,6 @@ def batch_near_dedup(
     sigs_scheme: str | None = SIGS_SCHEME_IN_PROCESS,
     quality_col: str | None = None,
     return_pairs: bool = False,
-    broadcast_ids: bool = True,
 ):
     """Whole-corpus near-dedup, one call: MinHash sign -> LSH band ->
     exact-Jaccard verify -> connected components -> keep one document
@@ -824,7 +810,6 @@ def batch_near_dedup(
         seed=seed,
         sigs=sigs,
         sigs_scheme=sigs_scheme,
-        broadcast_ids=broadcast_ids,
     )
     cand = lsh_candidate_pairs(
         all_sigs,
@@ -1470,33 +1455,101 @@ def contamination_stats(
     )
 
 
-def ingest_dedup_exact(
-    table,
+def ingest_corpus_increment(
+    catalog,
+    namespace: str,
+    table: str,
     new_docs: DataFrame,
     text_col: str = "text",
-) -> int:
-    """Incremental exact dedup at ingest: append only the new batch's
-    documents whose content does not already exist in the corpus table
-    (nor earlier in the batch itself — within-batch keep-one runs
-    first). The continuous-ingestion shape: the corpus never rewrites,
-    each increment pays one within-batch dedup plus one anti-join of
-    the (small) batch against the corpus' content hashes.
+    id_col: str = "doc_id",
+    near_threshold: float | None = None,
+    num_hashes: int = 32,
+    num_bands: int = 8,
+) -> tuple[dict, DataFrame]:
+    """One corpus increment, the step behind the nightly ingest job and
+    the streaming dedup sink: append to ``namespace.table`` only the new
+    documents whose content neither the corpus nor the batch itself
+    already holds. The corpus never rewrites; the work is O(batch):
 
-    Scale shape: the corpus side projects to the md5 content hash only
-    (column-pruned scan — no text moves), and the join keys are
-    fixed-width hashes; the batch side is the small one, so Spark
-    broadcasts it when it fits. Returns the committed version (or the
-    current version when everything was duplicate — a no-op increment
-    commits nothing)."""
-    batch = exact_dedup(new_docs, text_col=text_col)
-    existing = table.read().select(
-        F.md5(F.col(text_col)).alias("__h")
-    )
-    fresh = (
-        batch.withColumn("__h", F.md5(F.col(text_col)))
-        .join(existing, "__h", "left_anti")
-        .drop("__h")
-    )
-    if fresh.limit(1).count() == 0:
-        return table._load().version
-    return table.append(fresh)
+    1. exact dedup within the batch, then an anti-join against the
+       corpus' md5 content hashes (column-pruned scan, fixed-width
+       keys);
+    2. with ``near_threshold`` set (None = exact only) and a corpus to
+       match: heal the ``<table>_sigs`` store
+       (:func:`reconcile_signature_store`), checkpoint the batch
+       eagerly — near-dedup's candidates, its dropped ids and the kept
+       count would otherwise each rerun the exact-dedup window and the
+       md5 over the corpus text — and :func:`incremental_near_dedup`;
+    3. persist and count the survivors, append them (creating the
+       corpus on the first increment) and, with near-dedup on, their
+       signatures to the store. The store is created WITH its
+       :func:`sig_store_props`, before any data commit, so a crash
+       mid-creation leaves an empty store reconcile can heal, never a
+       property-less one holding signatures (ADVICE r11).
+
+    A fully duplicate increment commits nothing. Returns ``(report,
+    kept)``: ``report`` holds ``ingested`` and, when near-dedup ran,
+    ``sigs_backfilled`` and ``near_dup_dropped``; ``kept`` is the
+    PERSISTED survivor frame for downstream refreshes, which the
+    caller unpersists (the step does so itself if it raises)."""
+    corpus = catalog.table(namespace, table)
+    sigs_t = catalog.table(namespace, f"{table}_sigs")
+    report = {}
+    kept = exact_dedup(new_docs, text_col=text_col)
+    if corpus.exists():
+        existing = corpus.read().select(F.md5(F.col(text_col)).alias("__h"))
+        kept = (
+            kept.withColumn("__h", F.md5(F.col(text_col)))
+            .join(existing, "__h", "left_anti")
+            .drop("__h")
+        )
+        if near_threshold is not None:
+            report["sigs_backfilled"] = reconcile_signature_store(
+                catalog,
+                namespace,
+                table,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                num_bands=num_bands,
+            )
+            kept, dropped = incremental_near_dedup(
+                kept.localCheckpoint(eager=True),
+                corpus.read(),
+                corpus_sigs=sigs_t.read(),
+                # index, don't .get(): a property-less store must raise
+                # here, not silently skip the scheme check (ADVICE r11)
+                sigs_scheme=sigs_t.properties()["minhash.scheme"],
+                threshold=near_threshold,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                num_bands=num_bands,
+            )
+            report["near_dup_dropped"] = (
+                dropped.select(id_col).distinct().count()
+            )
+    kept = kept.persist()
+    try:
+        n = report["ingested"] = kept.count()
+        if n:
+            if corpus.exists():
+                corpus.append(kept)
+            else:
+                catalog.write_evolving(kept, namespace, table)
+            if near_threshold is not None:
+                sigs = minhash_signature(
+                    kept, id_col=id_col, text_col=text_col,
+                    num_hashes=num_hashes,
+                )
+                if not sigs_t.exists():
+                    catalog.create_namespace(namespace)
+                    sigs_t.create(
+                        sigs.schema,
+                        properties=sig_store_props(num_hashes, num_bands),
+                    )
+                sigs_t.append(sigs)
+    except BaseException:
+        kept.unpersist()
+        raise
+    return report, kept

@@ -6023,15 +6023,16 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def q140(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental exact dedup at ingest (dedup.ingest_dedup_exact):
-    a second batch overlapping the committed corpus appends ONLY its
-    genuinely new documents — the corpus never rewrites, the increment
-    pays a within-batch keep-one plus a hash anti-join against the
+    """Incremental exact dedup at ingest
+    (dedup.ingest_corpus_increment, exact only): a second batch
+    overlapping the committed corpus appends ONLY its genuinely new
+    documents — the corpus never rewrites, the increment pays a
+    within-batch keep-one plus a hash anti-join against the
     column-pruned corpus scan. After the increment, the table holds
     exactly one copy per distinct content. The oracle replays
     keep-first set algebra over the same two batches."""
     from spark_iceberg_schema_evolution_spark.operators.dedup import (
-        ingest_dedup_exact,
+        ingest_corpus_increment,
     )
 
     cat = _tmp_catalog(spark)
@@ -6044,10 +6045,12 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
     t = cat.table("db", "corpus")
     t.create(b1.schema)
     t.append(b1)
-    ingest_dedup_exact(t, b2)
+    ingest_corpus_increment(cat, "db", "corpus", b2)[1].unpersist()
     # a fully-duplicate third increment is a committed no-op
-    v = ingest_dedup_exact(t, b1.limit(50))
-    assert v == t._load().version
+    v = t._load().version
+    r, kept = ingest_corpus_increment(cat, "db", "corpus", b1.limit(50))
+    kept.unpersist()
+    assert r["ingested"] == 0 and v == t._load().version
     # n_chars is content-derived, so the checksum is independent of
     # WHICH duplicate won a keep-one tie (drift-robust vs future
     # testdata with intra-batch duplicate texts)

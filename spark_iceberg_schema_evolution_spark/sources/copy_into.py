@@ -60,7 +60,7 @@ def copy_into(
     with nothing new commits nothing. The file log is written AFTER
     the commit: a crash between the two re-ingests that increment's
     files (at-least-once across crashes — dedupe with
-    ``dedup.ingest_dedup_exact`` when the payload has content
+    ``dedup.ingest_corpus_increment`` when the payload has content
     identity; Delta's COPY INTO makes the same trade)."""
     if fmt not in _FORMATS:
         raise ValueError(f"format must be one of {sorted(_FORMATS)}: {fmt}")

@@ -483,12 +483,12 @@ def stream_dedup_ingest_to_lakehouse(
     num_bands: int = 8,
 ) -> dict:
     """Streaming corpus ingestion with per-micro-batch dedup — the
-    streaming face of ``jobs/ingest_incremental``: each epoch exact-
-    dedups within itself, anti-joins the corpus' content hashes, and
-    (optionally) near-dedups against the materialized signature store
-    before committing; survivors append to the corpus and their
-    signatures to the ``<table>_sigs`` store, so every epoch's cost is
-    O(epoch), never O(corpus).
+    streaming face of ``jobs/ingest_incremental``: each epoch runs the
+    same :func:`~spark_iceberg_schema_evolution_spark.operators.dedup.ingest_corpus_increment`
+    step — exact dedup within itself, an anti-join against the corpus'
+    content hashes, optional near-dedup against the ``<table>_sigs``
+    signature store, then the corpus and store appends — so every
+    epoch's cost is O(epoch), never O(corpus).
 
     foreachBatch + the engine's batch operators is deliberately the
     implementation: dedup-against-all-history is unbounded state no
@@ -499,89 +499,28 @@ def stream_dedup_ingest_to_lakehouse(
     Returns {"committed_epochs": n, "rows_ingested": n,
     "near_dropped": n}."""
     from spark_iceberg_schema_evolution_spark.operators.dedup import (
-        exact_dedup,
-        incremental_near_dedup,
-        minhash_signature,
-        reconcile_signature_store,
-        sig_store_props,
+        ingest_corpus_increment,
     )
 
     report = {"committed_epochs": 0, "rows_ingested": 0, "near_dropped": 0}
 
     def write_batch(df: DataFrame, epoch_id: int) -> None:
-        corpus = catalog.table(namespace, table)
-        sigs_t = catalog.table(namespace, f"{table}_sigs")
-        batch = exact_dedup(df, text_col=text_col)
-        if corpus.exists():
-            existing = corpus.read().select(
-                F.md5(F.col(text_col)).alias("__h")
-            )
-            batch = (
-                batch.withColumn("__h", F.md5(F.col(text_col)))
-                .join(existing, "__h", "left_anti")
-                .drop("__h")
-            )
-        if near_threshold is not None and corpus.exists():
-            # heal the store first: bootstrap backfill on a pre-existing
-            # corpus, crash-gap re-sign (see reconcile_signature_store)
-            reconcile_signature_store(
-                catalog,
-                namespace,
-                table,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                num_bands=num_bands,
-            )
-            batch, dropped = incremental_near_dedup(
-                batch,
-                corpus.read(),
-                corpus_sigs=sigs_t.read(),
-                # index, don't .get(): a property-less store must raise
-                # here, not silently skip the scheme check (ADVICE r11)
-                sigs_scheme=sigs_t.properties()["minhash.scheme"],
-                threshold=near_threshold,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                num_bands=num_bands,
-            )
-            report["near_dropped"] += (
-                dropped.select(id_col).distinct().count()
-            )
-        batch = batch.persist()
-        try:
-            n = batch.count()
-            if n:
-                if corpus.exists():
-                    corpus.append(batch)
-                else:
-                    catalog.write_evolving(batch, namespace, table)
-                if near_threshold is not None:
-                    sg = minhash_signature(
-                        batch,
-                        id_col=id_col,
-                        text_col=text_col,
-                        num_hashes=num_hashes,
-                    )
-                    if not sigs_t.exists():
-                        # properties land WITH table creation, before
-                        # any data commit (ADVICE r11): a crash
-                        # mid-creation leaves an empty store reconcile
-                        # can heal, never a property-less one holding
-                        # signatures it must refuse
-                        catalog.create_namespace(namespace)
-                        sigs_t.create(
-                            sg.schema,
-                            properties=sig_store_props(
-                                num_hashes, num_bands
-                            ),
-                        )
-                    sigs_t.append(sg)
-                report["rows_ingested"] += n
-                report["committed_epochs"] += 1
-        finally:
-            batch.unpersist()
+        r, kept = ingest_corpus_increment(
+            catalog,
+            namespace,
+            table,
+            df,
+            text_col=text_col,
+            id_col=id_col,
+            near_threshold=near_threshold,
+            num_hashes=num_hashes,
+            num_bands=num_bands,
+        )
+        kept.unpersist()
+        report["near_dropped"] += r.get("near_dup_dropped", 0)
+        if r["ingested"]:
+            report["rows_ingested"] += r["ingested"]
+            report["committed_epochs"] += 1
 
     q = (
         stream_df.writeStream.foreachBatch(write_batch)

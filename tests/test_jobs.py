@@ -257,6 +257,94 @@ def test_ingest_incremental_job_end_to_end(spark, tmp_path):
     assert corpus.plan_scan([("doc_id", "=", 99999)])["files_scanned"] == 0
 
 
+def test_nightly_job_and_streaming_sink_ingest_alike(spark, tmp_path):
+    """The nightly job and the streaming dedup sink run the same
+    corpus-increment step: fed the same two increments (seed docs, then
+    an exact dup, a near dup and a fresh doc), they leave equal corpus
+    and signature-store tables and report equal ingested and dropped
+    counts."""
+    import glob
+    import shutil
+    import time
+
+    from spark_iceberg_schema_evolution_spark.jobs.ingest_incremental import (
+        build_parser,
+        ingest_increment,
+    )
+    from spark_iceberg_schema_evolution_spark.streaming import windows as SW
+    from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
+
+    increments = [
+        [
+            (i, f"seed document number {i} with body text {i} here", "web")
+            for i in range(12)
+        ],
+        [
+            (100, "seed document number 3 with body text 3 here", "web"),
+            (101, "seed document number 7 with body text 7 here edited",
+             "web"),
+            (102, "completely fresh material " + "y " * 30, "books"),
+        ],
+    ]
+    job_in, stream_in = tmp_path / "incoming", tmp_path / "stream_src"
+    job_in.mkdir()
+    stream_in.mkdir()
+
+    def part_file(name, rows):
+        out = str(tmp_path / "stage" / name)
+        spark.createDataFrame(
+            rows, "doc_id LONG, text STRING, source STRING"
+        ).coalesce(1).write.mode("overwrite").parquet(out)
+        return glob.glob(f"{out}/part-*.parquet")[0]
+
+    args = build_parser().parse_args(
+        [
+            "--warehouse", str(tmp_path / "job_wh"), "--namespace", "db",
+            "--corpus", "docs", "--input", str(job_in),
+            "--near-dedup", "0.6",
+        ]
+    )
+    job_reports = []
+    for n, rows in enumerate(increments):
+        f = part_file(f"inc{n}", rows)
+        shutil.copy(f, str(job_in / f"inc{n}.parquet"))
+        shutil.copy(f, str(stream_in / f"inc{n}.parquet"))
+        time.sleep(1.1)  # file-source epoch order is mtime order
+        job_reports.append(ingest_increment(spark, args))
+
+    stream_cat = LakehouseCatalog(spark, str(tmp_path / "stream_wh"))
+    stream = (
+        spark.readStream.schema("doc_id LONG, text STRING, source STRING")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(stream_in))
+    )
+    sink = SW.stream_dedup_ingest_to_lakehouse(
+        stream, stream_cat, "db", "docs", str(tmp_path / "ck"),
+        near_threshold=0.6,
+    )
+
+    assert [r["ingested"] for r in job_reports] == [12, 1]
+    assert sink["rows_ingested"] == sum(r["ingested"] for r in job_reports)
+    assert sink["near_dropped"] == job_reports[1]["near_dup_dropped"] == 1
+    assert sink["committed_epochs"] == 2
+
+    job_cat = LakehouseCatalog(spark, str(tmp_path / "job_wh"))
+
+    def bag(cat, name):
+        df = cat.table("db", name).read()
+        cols = sorted(df.columns)
+        return cols, sorted(
+            tuple(map(repr, r)) for r in df.select(*cols).collect()
+        )
+
+    for name in ("docs", "docs_sigs"):
+        assert bag(job_cat, name) == bag(stream_cat, name), name
+    assert (
+        job_cat.table("db", "docs_sigs").properties()
+        == stream_cat.table("db", "docs_sigs").properties()
+    )
+
+
 def test_ingest_incremental_sig_store_bootstrap_and_heal(spark, tmp_path):
     """The two silent-recall holes reconcile_signature_store closes:
     (1) enabling --near-dedup on a PRE-EXISTING corpus with no store

@@ -796,7 +796,7 @@ def test_read_binary_media_ingest(spark, tmp_path):
     assert frames.count() == 3  # 104 bytes -> 3 full 32-byte frames
 
 
-def test_ingest_dedup_exact_semantics(spark, tmp_path):
+def test_ingest_corpus_increment_exact_semantics(spark, tmp_path):
     from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
 
     cat = LakehouseCatalog(spark, str(tmp_path / "wh"))
@@ -813,13 +813,18 @@ def test_ingest_dedup_exact_semantics(spark, tmp_path):
         [(10, "alpha"), (11, "gamma"), (12, "gamma"), (13, "delta")],
         ["doc_id", "text"],
     )
-    v2 = dedup.ingest_dedup_exact(t, b2)
-    assert v2 > v1
+    r2, kept = dedup.ingest_corpus_increment(cat, "db", "c", b2)
+    kept.unpersist()
+    v2 = t._load().version
+    assert r2 == {"ingested": 2} and v2 > v1
     texts = sorted(r.text for r in t.read().collect())
     assert texts == ["alpha", "beta", "delta", "gamma"]
     # fully-duplicate increment: no commit at all
-    v3 = dedup.ingest_dedup_exact(t, b2)
-    assert v3 == v2 == t._load().version
+    r3, kept = dedup.ingest_corpus_increment(cat, "db", "c", b2)
+    kept.unpersist()
+    assert r3 == {"ingested": 0} and v2 == t._load().version
+    # exact-only: no signature store appears
+    assert not cat.table("db", "c_sigs").exists()
 
 
 def test_mmr_rerank_diversifies_planted_duplicates(spark):

@@ -153,6 +153,79 @@ def test_corpus_signatures_store_backed_signs_only_missing(spark):
     )
 
 
+def test_minhash_and_bands_match_lambda_reference(spark):
+    """Persisted signature stores (``minhash.scheme``) hold these
+    values, so the one-expression signature and the array-cast band
+    keys must equal the per-element higher-order-function forms they
+    replace — built here as the reference — on real text, empty text
+    and NULL text, at two (num_hashes, seed) settings."""
+    from spark_iceberg_schema_evolution_spark.operators import dedup
+
+    docs = (
+        load(spark, SF_SMOKE, "documents")
+        .where("doc_id < 40")
+        .select("doc_id", "text")
+        .unionByName(
+            spark.createDataFrame(
+                [(-1, ""), (-2, None), (-3, "one two")],
+                "doc_id long, text string",
+            )
+        )
+    )
+    keyed = docs.select(
+        "doc_id",
+        F.transform(
+            dedup.shingles(dedup.normalized_words("text"), 5),
+            lambda s: F.xxhash64(s),
+        ).alias("__shkeys"),
+    )
+
+    def min_hash(seed):
+        return F.array_min(
+            F.transform("__shkeys", lambda h: F.xxhash64(h, F.lit(seed)))
+        )
+
+    def by_id(df, col):
+        return {r["doc_id"]: r[col] for r in df.collect()}
+
+    for num_hashes, seed, num_bands in ((32, 42, 8), (8, 7, 4)):
+        ref = keyed.select(
+            "doc_id",
+            F.array(
+                *[min_hash(seed + i) for i in range(num_hashes)]
+            ).alias("signature"),
+        )
+        got = dedup.minhash_signature(docs, num_hashes=num_hashes, seed=seed)
+        assert got.schema == ref.schema
+        assert by_id(got, "signature") == by_id(ref, "signature")
+
+        rows = num_hashes // num_bands
+        ref_bands = ref.select(
+            "doc_id",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.xxhash64(
+                            F.concat_ws(
+                                ",",
+                                F.transform(
+                                    F.slice("signature", b * rows + 1, rows),
+                                    lambda x: x.cast("string"),
+                                ),
+                            )
+                        )
+                        for b in range(num_bands)
+                    ]
+                )
+            ).alias("band_idx", "band_hash"),
+        )
+        got_bands = dedup._band_hashes(ref, "doc_id", num_bands, rows)
+        assert got_bands.schema == ref_bands.schema
+        assert sorted(map(tuple, got_bands.collect())) == sorted(
+            map(tuple, ref_bands.collect())
+        )
+
+
 def test_jaccard_candidate_path_no_shingle_self_join(spark):
     """With LSH candidates supplied, exact-Jaccard verification must join
     the (small) pair list to per-doc shingle SETS — never build the
