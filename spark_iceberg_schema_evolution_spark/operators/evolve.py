@@ -170,8 +170,16 @@ def align_schema(
     """Project ``df`` onto ``target``: existing columns cast to the target
     type (recursing into structs/arrays/maps — nested evolution), missing
     columns added as typed NULLs, extra columns appended last (reference
-    align_schema, spark_utils.py:82-111). One ``select``."""
-    have = {f.name: f.dataType for f in df.schema.fields}
+    align_schema, spark_utils.py:82-111). One ``select``; ``df`` itself
+    when it already has exactly the target's names and types, in order
+    (no extras, nothing to cast or pad) — the per-column expressions of
+    an identity projection are py4j calls Spark would only drop again."""
+    src = df.schema.fields
+    if [(f.name, f.dataType) for f in src] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
+    have = {f.name: f.dataType for f in src}
     cols: list[Column] = []
     for f in target.fields:
         if f.name in have:
@@ -184,7 +192,7 @@ def align_schema(
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     if keep_extras:
         tgt = {f.name for f in target.fields}
-        cols += [F.col(f.name) for f in df.schema.fields if f.name not in tgt]
+        cols += [F.col(f.name) for f in src if f.name not in tgt]
     return df.select(*cols)
 
 

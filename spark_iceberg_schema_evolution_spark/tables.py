@@ -960,27 +960,44 @@ class LakehouseTable:
                 _PART_COL, F.date_format(F.col(month_of), "yyyy-MM")
             )
             part_cols = [_PART_COL] + part_cols
+        # Write width. A partitioned write clusters rows by partition
+        # value first: without that every upstream task writes a file into
+        # every partition dir (tasks x partitions tiny files); with it each
+        # month (or bucket) gets O(1) files. That shuffle's width stays
+        # PINNED to defaultParallelism rather than left to AQE: AQE
+        # coalesces it by byte size, and for commit-sized batches that
+        # collapses the write to ONE task paying the per-file writer setup
+        # (parquet+zstd init, commit rename) for every partition dir
+        # SERIALLY — measured 1.5s -> 0.52s per 80-month commit (r13).
+        # Each partition value still hashes wholly into one task, so the
+        # one-file-per-month layout holds at any width, and the partition
+        # layout, not the task count, sizes the files.
+        #
+        # An unpartitioned write has no layout to size its files, so it is
+        # sized by its bytes, as Iceberg sizes data files by a target file
+        # size: k = ceil(estimated bytes / spark.sql.files.maxPartitionBytes)
+        # files, the read-split size, so each file reads back as one split.
+        # The estimate is the optimized plan's sizeInBytes (no Spark job).
+        # Below defaultParallelism the write coalesces to k tasks (no
+        # shuffle); at or above it — including an unknown size, which
+        # Spark reports as Long.MaxValue — the plan is left as it is, so
+        # the core count caps the width and never floors it. Every later
+        # scan opens each file in its own task, so a commit-sized batch
+        # written one file per upstream task taxes every read after it.
+        # An underestimate only narrows the write; the rows are the same.
+        #
+        # A sorted or z-order compaction arrives pre-range-partitioned
+        # into its target_files tasks: its clustering is kept as is.
         if part_cols and not pre_arranged:
-            # cluster rows by partition value before the partitioned write:
-            # without this every upstream task writes a file into every
-            # partition dir (tasks x partitions tiny files — the classic
-            # lakehouse small-files sin); with it each month (or bucket)
-            # gets O(1) files. The shuffle width is PINNED to
-            # defaultParallelism rather than left to AQE: AQE coalesces
-            # this exchange by byte size, and for commit-sized batches
-            # that collapses the write to ONE task paying the per-file
-            # writer setup (parquet+zstd init, commit rename) for every
-            # partition dir SERIALLY — measured 1.5s -> 0.52s per
-            # 80-month commit (r13). Each partition value still hashes
-            # wholly into one task, so the one-file-per-month layout is
-            # unchanged at any width; defaultParallelism scales with the
-            # cluster, not the data, which is exactly right here (a write
-            # wants at most all-cores concurrency, and file sizing is
-            # fixed by the partition layout, not the task count).
-            # (A sorted compaction arrives pre-range-partitioned — don't
-            # destroy its clustering.)
             width = max(self.spark.sparkContext.defaultParallelism, 1)
             out = out.repartition(width, *[F.col(c) for c in part_cols])
+        elif not pre_arranged:
+            plan = out._jdf.queryExecution().optimizedPlan()
+            conf = self.spark._jsparkSession.sessionState().conf()
+            est = plan.stats().sizeInBytes()
+            k = -(-est // conf.filesMaxPartitionBytes())
+            if k < self.spark.sparkContext.defaultParallelism:
+                out = out.coalesce(max(1, k))
         # "overwrite", not "error": the claim above created the (empty)
         # dir, and ErrorIfExists refuses an existing path
         writer = out.write.mode("overwrite")
@@ -1309,11 +1326,17 @@ class LakehouseTable:
                         F.col(snap.partition_month_of), "yyyy-MM"
                     ).isin(months)
                 )
-            parts.append(
-                self._apply_initial_defaults(
-                    align_schema(df, target, keep_extras=False), b, snap
-                )
-            )
+            part = align_schema(df, target, keep_extras=False)
+            if part is df:
+                # already aligned; still give this read its own attribute
+                # ids (one py4j call). ``df`` sits on the memoized scan
+                # relation every read of the batch shares: two reads
+                # sharing ids could not be joined by column reference
+                # (ambiguous self-join), and where DeduplicateRelations
+                # re-ids one side instead, a merge's source broadcast is
+                # no longer reused (one more job per rollup refresh)
+                part = df.toDF(*target.fieldNames())
+            parts.append(self._apply_initial_defaults(part, b, snap))
             seqs.append(int(b.get("seq", 0)))
         if not parts:
             return self.spark.createDataFrame([], target)

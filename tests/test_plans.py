@@ -919,3 +919,37 @@ def test_codegen_cache_outlives_a_hundred_pipelines(spark):
     for k in range(1, 120):
         _projection(spark, 2_000_003 + k).collect()
     assert _codegen_compiles(spark, first.collect) == 0
+
+
+def test_align_schema_identity_and_real_alignment(spark):
+    """Identical names and types in order: ``align_schema`` returns its
+    input (no identity projection). Any difference still casts, pads and
+    drops."""
+    from pyspark.sql import types as T
+
+    from spark_iceberg_schema_evolution_spark.operators.evolve import (
+        align_schema,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "id bigint, s string")
+    same = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
+    )
+    assert align_schema(df, same) is df
+    assert align_schema(df, same, keep_extras=False) is df
+    # reordered target: a projection, not the input
+    swapped = T.StructType(list(reversed(same.fields)))
+    out = align_schema(df, swapped)
+    assert out is not df and out.columns == ["s", "id"]
+    # cast, pad and drop
+    tgt = T.StructType(
+        [
+            T.StructField("id", T.StringType()),
+            T.StructField("new", T.IntegerType()),
+        ]
+    )
+    out = align_schema(df, tgt, keep_extras=False)
+    assert out.dtypes == [("id", "string"), ("new", "int")]
+    assert out.collect()[0].asDict() == {"id": "1", "new": None}
+    kept = align_schema(df, tgt)
+    assert kept.columns == ["id", "new", "s"]

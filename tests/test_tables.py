@@ -2962,6 +2962,103 @@ def test_partitioned_write_one_file_per_month(spark, tmp_path):
     assert t.read().count() == o.count()
 
 
+# --- write width: unpartitioned writes sized by their bytes ----------------
+
+
+def _wide_small_frame(spark, rows=2000):
+    """A small frame spread over at least 4 (and defaultParallelism)
+    partitions, with a plan-known size (range stats, not an RDD)."""
+    n = max(4, spark.sparkContext.defaultParallelism)
+    return spark.range(0, rows, 1, n).select(
+        F.col("id"),
+        F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") % 7).alias("g"),
+    )
+
+
+def _data_files(t):
+    return [f for f in t.files() if f["content"] == "data"]
+
+
+def test_small_unpartitioned_append_commits_one_file(spark, catalog):
+    src = _wide_small_frame(spark)
+    assert src.rdd.getNumPartitions() >= 4
+    catalog.write_evolving(src, "db", "w")
+    t = catalog.table("db", "w")
+    assert len(_data_files(t)) == 1
+    t.append(src)
+    assert [len(b["file_rows"]) for b in t._load().batches] == [1, 1]
+    # same rows as the input, as a bag
+    assert t.read().exceptAll(src.unionAll(src)).count() == 0
+    assert src.unionAll(src).exceptAll(t.read()).count() == 0
+
+
+def test_unpartitioned_write_width_follows_split_size(spark, catalog):
+    """k = ceil(estimate / maxPartitionBytes) files below
+    defaultParallelism; at or above it the write keeps its upstream
+    width, so the core count caps the file count and never floors it."""
+    src = _wide_small_frame(spark)
+    n_src = src.rdd.getNumPartitions()
+    dp = spark.sparkContext.defaultParallelism
+    est = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    want = min(3, dp - 1)
+    if want < 1:
+        pytest.skip("needs defaultParallelism >= 2")
+    try:
+        spark.conf.set(key, str(-(-est // want)))
+        catalog.write_evolving(src, "db", "k")
+        t = catalog.table("db", "k")
+        assert len(_data_files(t)) == want
+        spark.conf.set(key, "1")  # k = est >= defaultParallelism
+        t.append(src)
+        [_, wide] = t._load().batches
+        # the upstream width (defaultParallelism tasks, or 4 below that)
+        assert len(wide["file_rows"]) == n_src
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert t.read().count() == 2 * src.count()
+
+
+def test_partitioned_append_keeps_one_file_per_month(spark, catalog):
+    src = _wide_small_frame(spark).withColumn(
+        "d", F.expr("date_add(DATE'2024-01-01', CAST(id % 90 AS INT))")
+    )
+    catalog.write_evolving(src.limit(10), "db", "pm", partition_month_of="d")
+    t = catalog.table("db", "pm")
+    t.append(src)
+    batch = t._load().batches[-1]
+    assert batch["months"] == ["2024-01", "2024-02", "2024-03"]
+    files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
+    assert len(files) == len(batch["months"])
+
+
+def test_two_reads_of_one_table_join_by_column(spark, catalog):
+    """Each read() has its own attribute ids even when every batch is
+    already aligned (align_schema returns its input), so two reads of
+    one table join by column reference like two tables."""
+    catalog.write_evolving(_wide_small_frame(spark), "db", "rj")
+    t = catalog.table("db", "rj")
+    a, b = t.read(), t.read().where("g = 0")
+    joined = a.join(b, a["id"] == b["id"]).select(a["id"], b["s"])
+    assert joined.count() == b.count()
+
+
+def test_sorted_compaction_keeps_target_files(spark, catalog):
+    src = _wide_small_frame(spark)
+    catalog.write_evolving(src, "db", "sc")
+    t = catalog.table("db", "sc")
+    t.append(src)
+    t.compact(sort_by=["id"], target_files=4)
+    [batch] = t._load().batches
+    assert len(batch["file_rows"]) == 4
+    assert t.read().count() == 2 * src.count()
+
+
 # --- scan-construction: recorded reader schema + relation memo -------------
 
 
