@@ -973,17 +973,18 @@ class LakehouseTable:
         # one-file-per-month layout holds at any width, and the partition
         # layout, not the task count, sizes the files.
         #
-        # An unpartitioned write has no layout to size its files, so it is
-        # sized by its bytes, as Iceberg sizes data files by a target file
-        # size: k = ceil(estimated bytes / spark.sql.files.maxPartitionBytes)
-        # files, the read-split size, so each file reads back as one split.
-        # The estimate is the optimized plan's sizeInBytes (no Spark job).
-        # Below defaultParallelism the write coalesces to k tasks (no
-        # shuffle); at or above it — including an unknown size, which
-        # Spark reports as Long.MaxValue — the plan is left as it is, so
-        # the core count caps the width and never floors it. Every later
-        # scan opens each file in its own task, so a commit-sized batch
-        # written one file per upstream task taxes every read after it.
+        # An unpartitioned write has no layout to size its files. One whose
+        # estimated size (the optimized plan's sizeInBytes; no Spark job)
+        # is at most spark.sql.files.openCostInBytes is written as ONE
+        # file: that is the floor of the read-split size Spark's file
+        # reader picks at any core count, so the file reads back as one
+        # split, where a file per upstream task costs every later scan a
+        # task per file.
+        # repartition(1), not coalesce(1): coalesce would also run all the
+        # work since the last exchange (the scan of a merge target, the
+        # signing of a night's documents) in that one task; the shuffle
+        # keeps it at its upstream width. Larger writes, and an unknown
+        # size (Spark reports Long.MaxValue), keep their upstream width.
         # An underestimate only narrows the write; the rows are the same.
         #
         # A sorted or z-order compaction arrives pre-range-partitioned
@@ -994,10 +995,8 @@ class LakehouseTable:
         elif not pre_arranged:
             plan = out._jdf.queryExecution().optimizedPlan()
             conf = self.spark._jsparkSession.sessionState().conf()
-            est = plan.stats().sizeInBytes()
-            k = -(-est // conf.filesMaxPartitionBytes())
-            if k < self.spark.sparkContext.defaultParallelism:
-                out = out.coalesce(max(1, k))
+            if plan.stats().sizeInBytes() <= conf.filesOpenCostInBytes():
+                out = out.repartition(1)
         # "overwrite", not "error": the claim above created the (empty)
         # dir, and ErrorIfExists refuses an existing path
         writer = out.write.mode("overwrite")

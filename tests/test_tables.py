@@ -853,7 +853,7 @@ def test_sorted_compaction_enables_file_skipping(spark, catalog):
     assert before["batches_scanned"] == 3  # shuffled: nothing skippable
     t.compact(sort_by=["id"], target_files=8)
     after = t.plan_scan([("id", "<", 100)])
-    assert after["files_total"] >= 4
+    assert after["files_total"] == 8
     assert 0 < after["files_scanned"] < after["files_total"]
     got = sorted(r.id for r in t.read_where([("id", "<", 100)]).collect())
     assert got == list(range(100))
@@ -2958,8 +2958,14 @@ def test_partitioned_write_one_file_per_month(spark, tmp_path):
     months = batch["months"]
     files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
     assert len(files) == len(months)
+    # an append through the same write path keeps the layout
+    t.append(o)
+    batch = t._load().batches[-1]
+    assert batch["months"] == months
+    files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
+    assert len(files) == len(months)
     # and the read agrees with the source
-    assert t.read().count() == o.count()
+    assert t.read().count() == 2 * o.count()
 
 
 # --- write width: unpartitioned writes sized by their bytes ----------------
@@ -2993,48 +2999,56 @@ def test_small_unpartitioned_append_commits_one_file(spark, catalog):
     assert src.unionAll(src).exceptAll(t.read()).count() == 0
 
 
-def test_unpartitioned_write_width_follows_split_size(spark, catalog):
-    """k = ceil(estimate / maxPartitionBytes) files below
-    defaultParallelism; at or above it the write keeps its upstream
-    width, so the core count caps the file count and never floors it."""
+def test_unpartitioned_write_above_open_cost_keeps_upstream_width(
+    spark, catalog
+):
+    """Only a write estimated at most spark.sql.files.openCostInBytes is
+    narrowed to one file; a larger one keeps one file per upstream task."""
     src = _wide_small_frame(spark)
     n_src = src.rdd.getNumPartitions()
-    dp = spark.sparkContext.defaultParallelism
     est = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    key = "spark.sql.files.maxPartitionBytes"
+    key = "spark.sql.files.openCostInBytes"
     old = spark.conf.get(key, None)
-    want = min(3, dp - 1)
-    if want < 1:
-        pytest.skip("needs defaultParallelism >= 2")
     try:
-        spark.conf.set(key, str(-(-est // want)))
+        spark.conf.set(key, str(est))  # at the threshold: one file
         catalog.write_evolving(src, "db", "k")
         t = catalog.table("db", "k")
-        assert len(_data_files(t)) == want
-        spark.conf.set(key, "1")  # k = est >= defaultParallelism
+        spark.conf.set(key, str(est - 1))  # above it: upstream width
         t.append(src)
-        [_, wide] = t._load().batches
-        # the upstream width (defaultParallelism tasks, or 4 below that)
-        assert len(wide["file_rows"]) == n_src
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+    assert [len(b["file_rows"]) for b in t._load().batches] == [1, n_src]
     assert t.read().count() == 2 * src.count()
 
 
-def test_partitioned_append_keeps_one_file_per_month(spark, catalog):
+def test_narrowed_write_keeps_upstream_parallelism(spark, catalog):
+    """The one-file write shuffles into its one task: the work before
+    it (here a hash chain per row) still runs one task per upstream
+    partition, not serially in the writing task."""
     src = _wide_small_frame(spark).withColumn(
-        "d", F.expr("date_add(DATE'2024-01-01', CAST(id % 90 AS INT))")
+        "h", F.sha2(F.repeat(F.col("s"), 64), 512)
     )
-    catalog.write_evolving(src.limit(10), "db", "pm", partition_month_of="d")
-    t = catalog.table("db", "pm")
-    t.append(src)
-    batch = t._load().batches[-1]
-    assert batch["months"] == ["2024-01", "2024-02", "2024-03"]
-    files = glob.glob(os.path.join(batch["path"], "*", "*.parquet"))
-    assert len(files) == len(batch["months"])
+    n_src = src.rdd.getNumPartitions()
+    sc = spark.sparkContext
+    sc.setJobGroup("narrowed_write", "write_evolving of a small frame")
+    try:
+        catalog.write_evolving(src, "db", "nw")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(st).numTasks
+        for j in tracker.getJobIdsForGroup("narrowed_write")
+        for st in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(st) is not None
+    ]
+    assert max(tasks) == n_src
+    t = catalog.table("db", "nw")
+    assert len(_data_files(t)) == 1
+    assert _bag_symdiff(t.read(), src) == 0
 
 
 def test_two_reads_of_one_table_join_by_column(spark, catalog):
@@ -3046,17 +3060,6 @@ def test_two_reads_of_one_table_join_by_column(spark, catalog):
     a, b = t.read(), t.read().where("g = 0")
     joined = a.join(b, a["id"] == b["id"]).select(a["id"], b["s"])
     assert joined.count() == b.count()
-
-
-def test_sorted_compaction_keeps_target_files(spark, catalog):
-    src = _wide_small_frame(spark)
-    catalog.write_evolving(src, "db", "sc")
-    t = catalog.table("db", "sc")
-    t.append(src)
-    t.compact(sort_by=["id"], target_files=4)
-    [batch] = t._load().batches
-    assert len(batch["file_rows"]) == 4
-    assert t.read().count() == 2 * src.count()
 
 
 # --- scan-construction: recorded reader schema + relation memo -------------
