@@ -17,10 +17,20 @@ that make cross-engine value-hashes match:
   duckdb ``epoch_us``) or formatted strings; dates as strings.
 - Queries whose output is row-limited carry a total ORDER BY with an
   explicit unique tiebreak and explicit NULLS FIRST/LAST.
+
+Testdata tables are read through :func:`load`, which infers each file's
+reader schema once per process and hands it to every later read, so a
+query build schedules no schema-inference job. The memo is keyed on the
+file (real path, size, mtime) and on the confs that change how parquet
+maps to Spark types (``_SCHEMA_CONFS``); it holds schemas, not
+DataFrames, because two reads sharing one relation cannot be joined by
+column reference (an AMBIGUOUS self-join).
 """
 
 from __future__ import annotations
 
+import os
+import stat
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -28,6 +38,7 @@ import pandas as pd  # noqa: F401  (pandas_udf type hints resolve via module glo
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,9 +54,71 @@ TABLES = (
 )
 
 
+# The constructor arguments of Spark's ParquetToSparkSchemaConverter: the
+# confs that change how one parquet footer maps to Spark types.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of a regular parquet file's reader schema; None for
+    anything else (a directory, a missing or non-local path)."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    # an unset conf reads as None: its default, the same on every call
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    return real, st.st_size, st.st_mtime_ns, confs
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Reader schema of one parquet file, inferred once per file version
+    and conf values (see :func:`load`)."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if key is not None:
+            _SCHEMAS[key] = schema
+    return schema
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan for one testdata table (columnar, pushdown-eligible)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Parquet scan for one testdata table (columnar, pushdown-eligible).
+
+    Only the first read of a file infers its schema (a one-task Spark job
+    reading the footer); later reads pass the remembered schema and
+    schedule no job. The memo is keyed on the file's real path, size and
+    mtime, so a rewritten file is inferred again, and on the values of
+    ``_SCHEMA_CONFS``, so a session that maps parquet types differently
+    (``nanosAsLong``, ``inferTimestampNTZ``...) gets its own entry. A path
+    that is not a regular file is inferred on every read. The memo holds
+    schemas, not DataFrames: every call returns a new relation with new
+    attribute ids, so two loads of one table join by column reference.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -953,3 +953,120 @@ def test_align_schema_identity_and_real_alignment(spark):
     assert out.collect()[0].asDict() == {"id": "1", "new": None}
     kept = align_schema(df, tgt)
     assert kept.columns == ["id", "new", "s"]
+
+
+def _jobs_in(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; returns its result and the
+    ids of the Spark jobs it scheduled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_warm_load_schedules_no_job(spark):
+    """The second load of a testdata table passes the remembered schema:
+    no schema-inference job, and the schema a fresh inference gives."""
+    from spark_iceberg_schema_evolution_spark.queries import TABLES
+
+    for t in TABLES:
+        load(spark, SF_SMOKE, t)
+    dfs, jobs = _jobs_in(
+        spark, "warm_load", lambda: [load(spark, SF_SMOKE, t) for t in TABLES]
+    )
+    assert jobs == []
+    for t, df in zip(TABLES, dfs):
+        assert df.schema == spark.read.parquet(f"{SF_SMOKE}/{t}.parquet").schema
+
+
+def test_read_events_stream_builds_without_a_job(spark):
+    from spark_iceberg_schema_evolution_spark.streaming import windows as SW
+
+    SW.read_events_stream(spark, SF_SMOKE)
+    ev, jobs = _jobs_in(
+        spark, "stream_build", lambda: SW.read_events_stream(spark, SF_SMOKE)
+    )
+    assert jobs == []
+    assert ev.isStreaming and dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_stream_landing_dir_reused(spark):
+    """Two streams over one events file share one landing dir and read
+    the same rows."""
+    import glob
+    import tempfile
+
+    from spark_iceberg_schema_evolution_spark.streaming import windows as SW
+
+    def landing_dirs():
+        return set(glob.glob(f"{tempfile.gettempdir()}/events-stream-*"))
+
+    before = landing_dirs()
+    rows = []
+    for i in range(2):
+        ev = SW.read_events_stream(spark, SF_SMOKE).select("event_id", "ts")
+        out = SW.run_to_memory(ev, f"landing_sink_{i}", output_mode="append")
+        rows.append(sorted(out.collect()))
+        if i == 0:
+            after_first = landing_dirs()
+    assert landing_dirs() == after_first
+    assert len(after_first - before) <= 1
+    assert rows[0] == rows[1] and len(rows[0]) > 0
+
+
+def test_two_loads_of_one_table_join_by_column(spark):
+    import pandas as pd
+
+    a = load(spark, SF_SMOKE, "orders")
+    b = load(spark, SF_SMOKE, "orders")
+    n = a.join(b, a.o_orderkey == b.o_custkey).count()
+    o = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
+    want = len(o.merge(o, left_on="o_orderkey", right_on="o_custkey"))
+    assert n == want
+
+
+def test_load_sees_a_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_load_schema_follows_infer_timestamp_ntz(spark, tmp_path):
+    """A reader-affecting conf is part of the memo key: flipping
+    ``inferTimestampNTZ`` on a non-UTC-adjusted timestamp column changes
+    the loaded dtype."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    ts = pa.array([dt.datetime(2024, 1, 1, 10)], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), tmp_path / "t.parquet")
+    old = spark.conf.get(key, None)
+    try:
+        got = {}
+        for flag in ("true", "false", "true"):
+            spark.conf.set(key, flag)
+            got.setdefault(flag, []).append(
+                dict(load(spark, str(tmp_path), "t").dtypes)["ts"]
+            )
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert got == {
+        "true": ["timestamp_ntz", "timestamp_ntz"],
+        "false": ["timestamp"],
+    }
