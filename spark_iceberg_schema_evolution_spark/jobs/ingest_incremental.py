@@ -12,7 +12,12 @@ increment-native pieces so NOTHING rescans the corpus:
      corpus' content hashes (column-pruned, fixed-width keys)
   4. optional NEAR-dedup against the materialized corpus signature
      store (lightly edited re-crawls an exact hash misses); the store
-     is itself a lakehouse table appended per run
+     is itself a lakehouse table appended per run. Its completeness
+     check is metadata-only while the store's coverage bookmark names
+     the corpus's data batches; the id anti-join that heals a gap runs
+     only once those batches have moved (a crash gap, an exact-only
+     night, a compaction), and the signature-length check rides the
+     banding's own checkpoint
   5. append survivors to the corpus; append their signatures to the
      store
   6. incremental bloom-index maintenance on the new batches only

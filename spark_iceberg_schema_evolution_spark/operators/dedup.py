@@ -19,6 +19,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pandas as pd  # noqa: F401  (pandas_udf type hints resolve via module globals)
 
 from pyspark.sql import DataFrame, Window as W, functions as F
@@ -37,7 +40,7 @@ _MINHASH_SCHEME = "2"
 #: store-consuming dedup entry points: the caller VOUCHES the signature
 #: frame was built in-process this session by this module's
 #: :func:`minhash_signature` (the test / same-session path), so only the
-#: signature-length shape probe runs. It is deliberately NOT ``None``:
+#: signature-length check runs. It is deliberately NOT ``None``:
 #: ``None`` is what ``props.get("minhash.scheme")`` yields on a
 #: PERSISTED store that never recorded its scheme, and scheme-1
 #: signatures have the same length but different values — banding them
@@ -49,14 +52,11 @@ _MINHASH_SCHEME = "2"
 SIGS_SCHEME_IN_PROCESS = "__sigs_built_in_process__"
 
 
-def _check_sig_store(
-    sigs: DataFrame, sigs_scheme: str | None, num_hashes: int, arg_name: str
-) -> None:
+def _check_sig_scheme(sigs_scheme: str | None, arg_name: str) -> None:
     """Refuse a signature store that would band incompatibly with fresh
     signatures and so find nothing, silently: a scheme-less or
     scheme-mismatched persisted store (see :data:`SIGS_SCHEME_IN_PROCESS`
-    for the contract), or one built with a different ``num_hashes``
-    (a one-row limit probe, not a store scan)."""
+    for the contract)."""
     if sigs_scheme is None:
         raise ValueError(
             f"{arg_name} is a persisted signature store with NO recorded "
@@ -81,15 +81,33 @@ def _check_sig_store(
             "freshly signed docs finds NOTHING — rebuild the signature "
             "store (reconcile_signature_store)"
         )
-    probe = sigs.select(F.size("signature")).first()
-    if probe is not None and probe[0] != num_hashes:
+
+
+def _check_sig_len(lengths, num_hashes: int, arg_name: str) -> None:
+    """Refuse a store built with a different ``num_hashes``: any of the
+    signature ``lengths`` seen (None = no row seen) that differs."""
+    bad = [n for n in lengths if n is not None and n != num_hashes]
+    if bad:
         raise ValueError(
-            f"{arg_name} signature length {probe[0]} != num_hashes "
+            f"{arg_name} signature length {bad[0]} != num_hashes "
             f"{num_hashes}: the store was built with different MinHash "
             "parameters and would band incompatibly (see "
             "reconcile_signature_store, which records parameters as "
             "table properties)"
         )
+
+
+def _check_sig_store(
+    sigs: DataFrame, sigs_scheme: str | None, num_hashes: int, arg_name: str
+) -> None:
+    """:func:`_check_sig_scheme`, then the signature length of one store
+    row (a one-row limit probe job, not a store scan) for the entry
+    points that run no action of their own to observe it on."""
+    _check_sig_scheme(sigs_scheme, arg_name)
+    probe = sigs.select(F.size("signature")).first()
+    _check_sig_len(
+        [None if probe is None else probe[0]], num_hashes, arg_name
+    )
 
 
 def normalized_words(text_col: str = "text") -> F.Column:
@@ -453,9 +471,13 @@ def incremental_near_dedup(
 
     SCHEME COMPATIBILITY: caller-supplied ``corpus_sigs`` MUST hold
     scheme-2 (hash-once, round-10+) signatures — a persisted scheme-1
-    frame has the same signature LENGTH, passes the shape probe below,
+    frame has the same signature LENGTH, passes the length check,
     and silently yields zero candidates against the scheme-2
-    signatures computed here for the new batch. Stores
+    signatures computed here for the new batch. The length check is
+    an Observation of ``min``/``max(size(signature))`` riding the
+    candidate checkpoint: every store row the banding reads, no job of
+    its own, and the same ``ValueError`` as the other entry points'
+    one-row probe. Stores
     managed by ``reconcile_signature_store`` record the scheme as the
     ``minhash.scheme`` table property and refuse on mismatch; when
     reading a store yourself, thread that property in as
@@ -466,8 +488,8 @@ def incremental_near_dedup(
     module's :func:`minhash_signature` (the test / same-session path).
     ``None`` — what ``props.get("minhash.scheme")`` yields on a
     property-less persisted store — REFUSES (r12 ask #8): before the
-    sentinel existed, such a None silently degraded to the shape
-    probe, which scheme-1 signatures pass while banding to zero
+    sentinel existed, such a None silently degraded to the length
+    check, which scheme-1 signatures pass while banding to zero
     candidates. ``reconcile_signature_store`` refuses property-less
     stores outright; thread its recorded property here.
 
@@ -479,24 +501,41 @@ def incremental_near_dedup(
     consuming ``kept`` AND ``dropped`` costs one banding join and one
     verify — the previous fully-lazy form re-signed the new batch and
     re-ran the verify joins once per downstream action (r11)."""
+    from pyspark.sql import Observation
+
+    lengths = None
     if corpus_sigs is None:
         corpus_sigs = minhash_signature(
             corpus_docs, id_col, text_col, num_hashes, shingle_size, seed
         )
     else:
-        _check_sig_store(corpus_sigs, sigs_scheme, num_hashes, "corpus_sigs")
+        _check_sig_scheme(sigs_scheme, "corpus_sigs")
+        # the store's signature lengths ride the candidate checkpoint
+        # below: every store row the banding reads is checked, and no
+        # probe job of its own runs
+        lengths = Observation()
+        corpus_sigs = corpus_sigs.observe(
+            lengths,
+            F.min(F.size("signature")).alias("lo"),
+            F.max(F.size("signature")).alias("hi"),
+        )
     new_sigs = minhash_signature(
         new_docs, id_col, text_col, num_hashes, shingle_size, seed
     )
     rows_per_band = max(1, num_hashes // num_bands)
     nb = _band_hashes(new_sigs, id_col, num_bands, rows_per_band)
-    cb = _band_hashes(corpus_sigs, id_col, num_bands, rows_per_band)
-    small = (
-        cb.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    # skew guard as a window count, as in lsh_candidate_pairs: the same
+    # bucket sizes as an aggregate + semi-join, without the aggregate's
+    # own broadcast job
+    cb = (
+        _band_hashes(corpus_sigs, id_col, num_bands, rows_per_band)
+        .withColumn(
+            "__n",
+            F.count(F.lit(1)).over(W.partitionBy("band_idx", "band_hash")),
+        )
         .where(F.col("__n") <= max_bucket_size)
+        .drop("__n")
     )
-    cb = cb.join(small, ["band_idx", "band_hash"], "left_semi")
     # materialize the candidate list ONCE (it is tiny — pair ids only):
     # it feeds the corpus-side prune AND the verify join, and without
     # this the caller's separate kept/dropped actions would each re-run
@@ -504,8 +543,12 @@ def incremental_near_dedup(
     # verify-skill N-fold-re-evaluation check; same class as the r11
     # rollup-delta finding). Bounded by candidates, GC-reclaimed.
     cand = (
-        nb.alias("n")
-        .join(cb.alias("c"), ["band_idx", "band_hash"])
+        # the store side leads: the checkpoint then runs in the store
+        # frame's session, whose listener completes the Observation (a
+        # foreachBatch frame's cloned session may not carry it, and
+        # the wait below would never end)
+        cb.alias("c")
+        .join(nb.alias("n"), ["band_idx", "band_hash"])
         .select(
             F.col(f"n.{id_col}").alias("__new_id"),
             F.col(f"c.{id_col}").alias("__corpus_id"),
@@ -513,6 +556,18 @@ def incremental_near_dedup(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    if lengths is not None:
+        # an empty side prunes the join, and Spark then completes the
+        # Observation with an empty row, which .get cannot convert: no
+        # store row was banded, as the old probe's None on an empty store
+        seen = lengths.get if lengths._jo.getRow().length() else {}
+        try:
+            _check_sig_len(
+                [seen.get("lo"), seen.get("hi")], num_hashes, "corpus_sigs"
+            )
+        except ValueError:
+            unpersist_checkpoint(cand)
+            raise
 
     def sh_set(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
@@ -574,6 +629,33 @@ _SIG_PROPS = (
 )
 
 
+# the coverage bookmark of a signature store, set when the store is
+# known to sign every id of the corpus: the corpus data batches it
+# covers and the store version holding them (the rollup's
+# _SRC_PROP/_DST_PROP pair, here keyed on batches, not the corpus
+# version: a bloom-index build commits a corpus version adding no row)
+_COVERS_PROP = "sigs.corpus_batches"
+_AT_PROP = "sigs.store_version"
+
+
+def _corpus_batches(corpus, snap) -> str:
+    """Short digest of the snapshot's data batches: each batch's path
+    relative to the table root and its row count, so equal histories in
+    two warehouses give equal records."""
+    parts = [
+        f"{os.path.relpath(b['path'], corpus.path)}:"
+        f"{sum((b.get('file_rows') or {}).values())}"
+        for b in snap.batches
+    ]
+    return hashlib.sha1("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def _record_coverage(sigs_t, corpus_batches: str) -> None:
+    sigs_t.set_properties(
+        {_COVERS_PROP: corpus_batches, _AT_PROP: sigs_t._load().version}
+    )
+
+
 def sig_store_props(
     num_hashes: int, num_bands: int, shingle_size: int = 5, seed: int = 42
 ) -> dict[str, str]:
@@ -625,9 +707,22 @@ def reconcile_signature_store(
     Parameters are recorded as table properties on the store at
     creation; a later call with different parameters raises instead of
     banding incompatibly (which would yield zero candidates,
-    silently). Cost per run: one column-pruned id anti-join over the
-    corpus (fixed-width keys) + signature work proportional to the
-    MISSING rows only — O(corpus ids) scan, O(gap) compute.
+    silently).
+
+    Cost per run: metadata only while the store's coverage bookmark
+    (its ``sigs.corpus_batches`` and ``sigs.store_version`` properties)
+    names the corpus's current data batches and the store's own head
+    version. Set after every reconcile that ran the anti-join and after
+    every signature append of :func:`ingest_corpus_increment`, it
+    matches on a steady night, as a bloom-index build adds no batch.
+    Once the corpus's batches have moved (a crash gap, an exact-only
+    night, a compaction, a rollback) or the store has (a rollback, a
+    compaction, a foreign write), one column-pruned id anti-join over
+    the corpus (fixed-width keys) runs, plus signature work
+    proportional to the MISSING rows only — O(corpus ids) scan, O(gap)
+    compute. Like the anti-join itself, which matches on ids only, the
+    bookmark assumes the store follows one corpus: drop the store with
+    a dropped and rebuilt corpus.
 
     Returns the number of backfilled rows."""
     corpus = catalog.table(namespace, table)
@@ -636,6 +731,8 @@ def reconcile_signature_store(
     sigs_name = f"{table}_sigs"
     sigs_t = catalog.table(namespace, sigs_name)
     want = sig_store_props(num_hashes, num_bands, shingle_size, seed)
+    snap = corpus._load()
+    batches = _corpus_batches(corpus, snap)
     if sigs_t.exists():
         props = sigs_t.properties()
         recorded = {k: props[k] for k in _SIG_PROPS if k in props}
@@ -671,11 +768,15 @@ def reconcile_signature_store(
                     "the store (drop it and re-run "
                     "reconcile_signature_store)"
                 )
-        missing = corpus.read().join(
+        elif (props.get(_COVERS_PROP), props.get(_AT_PROP)) == (
+            batches, str(sigs_t._load().version)
+        ):
+            return 0  # the bookmark matches: nothing can be missing
+        missing = corpus.read(version=snap.version).join(
             sigs_t.read().select(id_col), id_col, "left_anti"
         )
     else:
-        missing = corpus.read()
+        missing = corpus.read(version=snap.version)
     missing = missing.select(id_col, text_col)
     new_sigs = minhash_signature(
         missing, id_col, text_col, num_hashes, shingle_size, seed
@@ -691,6 +792,8 @@ def reconcile_signature_store(
                 catalog.create_namespace(namespace)
                 sigs_t.create(new_sigs.schema, properties=want)
             sigs_t.append(new_sigs)
+        if sigs_t.exists():
+            _record_coverage(sigs_t, batches)
     finally:
         new_sigs.unpersist()
     return n
@@ -1549,6 +1652,11 @@ def ingest_corpus_increment(
                         properties=sig_store_props(num_hashes, num_bands),
                     )
                 sigs_t.append(sigs)
+                # reconcile left the store complete for the corpus
+                # before this append, and both appends landed
+                _record_coverage(
+                    sigs_t, _corpus_batches(corpus, corpus._load())
+                )
     except BaseException:
         kept.unpersist()
         raise

@@ -1846,12 +1846,22 @@ def t2_approx(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _tmp_catalog(spark: SparkSession):
+def _tmp_dir(prefix: str) -> str:
+    """A fresh temp dir for one query's files, removed at interpreter
+    exit: the query returns a lazy frame that reads it until then."""
+    import atexit
+    import shutil
     import tempfile
 
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+def _tmp_catalog(spark: SparkSession):
     from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
 
-    return LakehouseCatalog(spark, tempfile.mkdtemp(prefix="lakehouse-q-"))
+    return LakehouseCatalog(spark, _tmp_dir("lakehouse-q-"))
 
 
 @q(
@@ -2100,8 +2110,6 @@ def q52(spark: SparkSession, sf: str) -> DataFrame:
     The oracle pins ts-derived values (min/max epoch-us, distinct hour
     buckets), not just counts: VERDICT r3 — a 1000x timestamp corruption
     sailed through the count-only oracle unnoticed."""
-    import tempfile
-
     from spark_iceberg_schema_evolution_spark.streaming import windows as SW
 
     cat = _tmp_catalog(spark)
@@ -2111,7 +2119,7 @@ def q52(spark: SparkSession, sf: str) -> DataFrame:
         cat,
         "db",
         "events_landed",
-        checkpoint_dir=tempfile.mkdtemp(prefix="ckpt-"),
+        checkpoint_dir=_tmp_dir("ckpt-"),
     )
     t = cat.table("db", "events_landed").read()
     return t.agg(
@@ -3876,10 +3884,8 @@ def t2_orc(spark: SparkSession, sf: str) -> DataFrame:
     """ORC source/sink round-trip (DuckDB cannot read ORC, so rows-only):
     write nation as ORC (zlib), read back, prove byte-identical content
     via a checksum against the parquet original."""
-    import tempfile
-
     n = load(spark, sf, "nation")
-    path = tempfile.mkdtemp(prefix="orc-") + "/nation_orc"
+    path = _tmp_dir("orc-") + "/nation_orc"
     n.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     chk = F.bit_xor(F.xxhash64(*sorted(n.columns))).alias("checksum")
@@ -6151,14 +6157,12 @@ def q141(spark: SparkSession, sf: str) -> DataFrame:
     commits nothing — the loaded-file log, not a content diff, carries
     the idempotence. Table content must equal the plain union the
     oracle computes, proving no file loaded twice and none missed."""
-    import tempfile
-
     from spark_iceberg_schema_evolution_spark.sources.copy_into import (
         copy_into,
     )
 
     cat = _tmp_catalog(spark)
-    landing = tempfile.mkdtemp(prefix="landing-q141-")
+    landing = _tmp_dir("landing-q141-")
     o = load(spark, sf, "orders").select(
         "o_orderkey", "o_custkey", cents(F.col("o_totalprice")).alias("c")
     )
@@ -6865,14 +6869,12 @@ def q148(spark: SparkSession, sf: str) -> DataFrame:
     joined with ZERO Exchange on either side (plan-gated in
     tests/test_bucketed_join.py) — the pay-one-write, shuffle-free-
     forever contract for repeated fact-dimension joins at scale."""
-    import tempfile
-
     from spark_iceberg_schema_evolution_spark.operators.relational import (
         bucketed_cojoin,
         write_bucketed,
     )
 
-    base = tempfile.mkdtemp(prefix="bucketed-q148-")
+    base = _tmp_dir("bucketed-q148-")
     o = load(spark, sf, "orders").select(
         F.col("o_custkey").alias("custkey"),
         cents(F.col("o_totalprice")).alias("price_c"),
@@ -10266,7 +10268,6 @@ def t2_stream_cdc_sink(spark: SparkSession, sf: str) -> DataFrame:
     pinned in tests/test_streaming.py; rows-only here."""
     import datetime as _dt
     import os as _os
-    import tempfile as _tf
     import time as _time
 
     from spark_iceberg_schema_evolution_spark.streaming import (
@@ -10274,7 +10275,7 @@ def t2_stream_cdc_sink(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     cat = _tmp_catalog(spark)
-    work = _tf.mkdtemp(prefix="cdc-face-")
+    work = _tmp_dir("cdc-face-")
     src = _os.path.join(work, "feed")
     _os.makedirs(src)
 
@@ -10424,7 +10425,6 @@ def t2_stream_dedup_ingest(spark: SparkSession, sf: str) -> DataFrame:
     crash semantics are pinned in tests/test_streaming.py:412;
     rows-only here."""
     import os as _os
-    import tempfile as _tf
     import time as _time
 
     from spark_iceberg_schema_evolution_spark.operators.dedup import (
@@ -10435,7 +10435,7 @@ def t2_stream_dedup_ingest(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     cat = _tmp_catalog(spark)
-    work = _tf.mkdtemp(prefix="dedup-ingest-face-")
+    work = _tmp_dir("dedup-ingest-face-")
     src = _os.path.join(work, "feed")
     _os.makedirs(src)
 
@@ -10528,7 +10528,6 @@ def t2_jobs_smoke(spark: SparkSession, sf: str) -> DataFrame:
     import json as _json
     import os as _os
     import shutil as _shutil
-    import tempfile as _tf
 
     from spark_iceberg_schema_evolution_spark.jobs.curate_corpus import (
         build_parser as curate_parser,
@@ -10548,7 +10547,7 @@ def t2_jobs_smoke(spark: SparkSession, sf: str) -> DataFrame:
         LakehouseCatalog,
     )
 
-    work = _tf.mkdtemp(prefix="jobs-face-")
+    work = _tmp_dir("jobs-face-")
 
     # 1. curation job over a bounded slice of the real documents table
     # (a fixed 250-doc input keeps the smoke's wall-clock flat across

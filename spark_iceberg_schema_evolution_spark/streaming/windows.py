@@ -15,11 +15,8 @@ against Kafka/files with real triggers — nothing here is test-only.
 
 from __future__ import annotations
 
-import atexit
 import datetime as _dt
 import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -81,11 +78,12 @@ _LANDING: dict[str, str] = {}
 
 
 def _landing_dir(src: str) -> str:
+    from spark_iceberg_schema_evolution_spark.queries import _tmp_dir
+
     d = _LANDING.get(src)
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="events-stream-")
+        d = _tmp_dir("events-stream-")
         os.symlink(src, os.path.join(d, "events.parquet"))
-        atexit.register(shutil.rmtree, d, True)
         _LANDING[src] = d
     return d
 

@@ -23,6 +23,18 @@ def spark():
     s.stop()
 
 
+def _jobs_in(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; returns its result and the
+    ids of the Spark jobs it scheduled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 # --- two-tier suite (r14, VERDICT r13 #3) -----------------------------------
 # The full suite has outgrown the external verify window (~63 min at
 # local[32]; the r13 driver run truncated mid-suite with zero failures,

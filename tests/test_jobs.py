@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from spark_iceberg_schema_evolution_spark.jobs.ingest_csv import main
+from tests.conftest import _jobs_in
 
 
 def test_ingest_csv_cli_end_to_end(spark, tmp_path, capsys):
@@ -533,6 +534,42 @@ def test_incremental_near_dedup_rejects_mismatched_store(spark):
         )
 
 
+def test_incremental_near_dedup_batch_from_another_session(spark):
+    """The store's signature lengths are observed on the candidate
+    checkpoint and read with a blocking wait. A streaming sink's batch
+    lives in a cloned session, so the new batch here comes from another
+    session: the wait must still end, with the match found."""
+    import threading
+
+    from spark_iceberg_schema_evolution_spark.operators import dedup
+
+    corpus = spark.createDataFrame(
+        [(i, f"document body number {i} with words {i} and more")
+         for i in range(6)],
+        "doc_id long, text string",
+    )
+    new = spark.newSession().createDataFrame(
+        [(100, "document body number 3 with words 3 and more again")],
+        "doc_id long, text string",
+    )
+    out = {}
+
+    def run():
+        _, dropped = dedup.incremental_near_dedup(
+            new, corpus, corpus_sigs=dedup.minhash_signature(corpus),
+            threshold=0.6, sigs_scheme=dedup._MINHASH_SCHEME,
+        )
+        out["dropped"] = [
+            (r.doc_id, r.matched_corpus_id) for r in dropped.collect()
+        ]
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "the signature-length Observation never completed"
+    assert out["dropped"] == [(100, 3)]
+
+
 def test_ingest_incremental_maintains_quantile_sketch(spark, tmp_path):
     """--sketch-col: each nightly run appends only the kept batch's
     bucket rows; after two runs the coarsened sketch equals a one-shot
@@ -941,3 +978,70 @@ def test_sig_store_heals_empty_property_less_store(spark, tmp_path):
     assert n == 5
     assert sigs.properties()["minhash.scheme"] == _MINHASH_SCHEME
     assert reconcile_signature_store(cat, "db", "c") == 0
+
+
+def test_sig_store_coverage_bookmark(spark, tmp_path):
+    """reconcile_signature_store on a store known complete is metadata
+    only: zero Spark jobs. Whatever moves the corpus's data batches or
+    the store's head (an append with no signatures, a compaction, a
+    store rollback) sends the next reconcile back to the anti-join,
+    which heals what is missing; a bloom-index build, which commits a
+    corpus version without a batch, does not."""
+    from spark_iceberg_schema_evolution_spark.operators.dedup import (
+        ingest_corpus_increment,
+        reconcile_signature_store,
+    )
+    from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
+
+    cat = LakehouseCatalog(spark, str(tmp_path / "wh"))
+
+    def docs(ids):
+        return spark.createDataFrame(
+            [(i, f"document body number {i} with words {i} and more")
+             for i in ids],
+            "doc_id long, text string",
+        )
+
+    def reconcile(tag):
+        return _jobs_in(
+            spark, f"bookmark_{tag}",
+            lambda: reconcile_signature_store(cat, "db", "c"),
+        )
+
+    cat.write_evolving(docs(range(5)), "db", "c")
+    corpus, sigs = cat.table("db", "c"), cat.table("db", "c_sigs")
+    assert reconcile("bootstrap")[0] == 5
+    assert reconcile("steady") == (0, [])
+
+    # crash gap: corpus rows land without their signatures
+    corpus.append(docs([5]))
+    n, jobs = reconcile("gap")
+    assert n == 1 and jobs
+    assert reconcile("steady_after_gap") == (0, [])
+
+    # a compaction rewrites the batches: the anti-join runs, finds none
+    corpus.compact()
+    n, jobs = reconcile("compacted")
+    assert n == 0 and jobs
+    assert reconcile("steady_after_compact") == (0, [])
+
+    # a store rollback to before the heal loses doc 5's signature
+    healed_at = sigs.snapshots()[-1]["version"]
+    sigs.rollback_to(healed_at - 1)
+    assert sigs.row_count() == 5
+    n, jobs = reconcile("store_rollback")
+    assert n == 1 and jobs and sigs.row_count() == 6
+    assert reconcile("steady_after_rollback") == (0, [])
+
+    # the increment step records coverage after its own sig append; a
+    # bloom-index build commits a corpus version but adds no batch
+    report, kept = ingest_corpus_increment(
+        cat, "db", "c", docs([6, 7]), near_threshold=0.7
+    )
+    kept.unpersist()
+    assert report == {
+        "sigs_backfilled": 0, "near_dup_dropped": 0, "ingested": 2
+    }
+    corpus.build_bloom_index("doc_id")
+    assert reconcile("after_step") == (0, [])
+    assert sigs.row_count() == corpus.row_count() == 8

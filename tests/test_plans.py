@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from spark_iceberg_schema_evolution_spark.operators.relational import asof_join
 from spark_iceberg_schema_evolution_spark.plans import explain
 from spark_iceberg_schema_evolution_spark.queries import REGISTRY, load, load_events
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _jobs_in
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -224,6 +224,82 @@ def test_minhash_and_bands_match_lambda_reference(spark):
         assert sorted(map(tuple, got_bands.collect())) == sorted(
             map(tuple, ref_bands.collect())
         )
+
+
+def test_incremental_skew_guard_matches_aggregate_reference(spark):
+    """The window-count skew guard of ``incremental_near_dedup`` keeps
+    the corpus band buckets the aggregate + semi-join form kept — built
+    here as the reference — so ``kept`` and ``dropped`` are the same.
+    The corpus holds five copies of one text (buckets of 5, over the
+    cap of 3: dropped) and three of another (buckets of 3: kept)."""
+    from spark_iceberg_schema_evolution_spark.operators import dedup
+
+    hot = "the hot text that five crawled copies of one page all share"
+    warm = "the warm text that exactly three copies of a page share today"
+    corpus = spark.createDataFrame(
+        [(i, hot) for i in range(5)]
+        + [(10 + i, warm) for i in range(3)]
+        + [(20 + i, f"a unique corpus page number {i} about topic {i}")
+           for i in range(6)],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [(100, hot + " again"), (101, warm + " again"),
+         (102, "a unique corpus page number 3 about topic 3 again"),
+         (103, "nothing like anything the corpus holds at all")],
+        "doc_id long, text string",
+    )
+    cap, threshold = 3, 0.6
+    kept, dropped = dedup.incremental_near_dedup(
+        new, corpus, corpus_sigs=dedup.minhash_signature(corpus),
+        threshold=threshold, max_bucket_size=cap,
+    )
+
+    nb = dedup._band_hashes(dedup.minhash_signature(new), "doc_id", 8, 4)
+    cb = dedup._band_hashes(dedup.minhash_signature(corpus), "doc_id", 8, 4)
+    buckets = ["band_idx", "band_hash"]
+    small = (
+        cb.groupBy(*buckets)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") <= cap)
+    )
+    assert small.count() < cb.select(*buckets).distinct().count()
+    guarded = cb.join(small, buckets, "left_semi")
+    cand = {
+        (r[0], r[1])
+        for r in nb.alias("n")
+        .join(guarded.alias("c"), buckets)
+        .select("n.doc_id", "c.doc_id")
+        .collect()
+    }
+    sh = {
+        r.doc_id: set(r.sh)
+        for r in new.unionByName(corpus)
+        .select(
+            "doc_id",
+            dedup.shingles(dedup.normalized_words("text")).alias("sh"),
+        )
+        .collect()
+    }
+
+    def jaccard(a, b):
+        return len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+
+    want_dropped = {
+        (a, b) for a, b in cand if jaccard(a, b) >= threshold
+    }
+    got = {
+        (r.doc_id, r.matched_corpus_id): r.jaccard for r in dropped.collect()
+    }
+    assert set(got) == want_dropped
+    for (a, b), j in got.items():
+        assert j == pytest.approx(jaccard(a, b))
+    assert {r.doc_id for r in kept.collect()} == (
+        {100, 101, 102, 103} - {a for a, _ in want_dropped}
+    )
+    # the guard mattered: the hot copies were never candidates, the
+    # warm ones (at the cap) were
+    assert {a for a, _ in want_dropped} == {101, 102}
 
 
 def test_jaccard_candidate_path_no_shingle_self_join(spark):
@@ -955,18 +1031,6 @@ def test_align_schema_identity_and_real_alignment(spark):
     assert kept.columns == ["id", "new", "s"]
 
 
-def _jobs_in(spark, group: str, fn):
-    """Run ``fn`` under job group ``group``; returns its result and the
-    ids of the Spark jobs it scheduled."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
 def test_warm_load_schedules_no_job(spark):
     """The second load of a testdata table passes the remembered schema:
     no schema-inference job, and the schema a fresh inference gives."""
@@ -1015,6 +1079,34 @@ def test_stream_landing_dir_reused(spark):
     assert landing_dirs() == after_first
     assert len(after_first - before) <= 1
     assert rows[0] == rows[1] and len(rows[0]) > 0
+
+
+def test_query_temp_dirs_removed_at_exit(tmp_path):
+    """Every temp dir a registry query makes (lakehouse warehouses,
+    landing, checkpoint and work dirs) comes from one helper, which
+    removes it when the interpreter exits."""
+    import inspect
+    import os
+    import subprocess
+    import sys
+
+    from spark_iceberg_schema_evolution_spark import queries
+
+    assert inspect.getsource(queries).count("mkdtemp(") == 1
+    code = (
+        "from spark_iceberg_schema_evolution_spark.queries import _tmp_dir\n"
+        "d = _tmp_dir('lakehouse-q-')\n"
+        "open(d + '/f', 'w').close()\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    made = out.stdout.strip().splitlines()[-1]
+    assert made.startswith(str(tmp_path)) and not os.path.exists(made)
 
 
 def test_two_loads_of_one_table_join_by_column(spark):
