@@ -202,8 +202,6 @@ def refresh_rollup(
         updates = {"n_rows": "t.n_rows + s.n_rows"}
         for c in sum_cols:
             updates[f"sum_{c}"] = f"t.sum_{c} + s.sum_{c}"
-        from ..tables import MERGE_BROADCAST_ROWS
-
         v = target.merge_into(
             checked,
             on=group_cols,
@@ -216,10 +214,10 @@ def refresh_rollup(
             source_unique=True,
             # n_groups is the delta's MEASURED row count (the Observation
             # riding the checkpoint): a touched-groups frame under the
-            # broadcast ceiling skips every source-side shuffle in the
-            # merge instead of waiting for AQE to convert one
-            # materialized stage at a time (guide §3.1)
-            source_broadcast=n_groups <= MERGE_BROADCAST_ROWS,
+            # merge's broadcast ceiling skips every source-side shuffle
+            # instead of waiting for AQE to convert one materialized
+            # stage at a time (guide §3.1)
+            source_rows=n_groups,
         )
         target.set_properties({_SRC_PROP: src_v, _DST_PROP: v})
         return v

@@ -214,8 +214,6 @@ def scd2_merge(
         # for the close merge (guide §3.1, measured not guessed)
         applied = chained.count()
         if table.exists():
-            from ..tables import MERGE_BROADCAST_ROWS
-
             first_ts = ch.groupBy(*keys).agg(
                 F.min(valid_from).alias("__first_ts")
             )
@@ -246,7 +244,7 @@ def scd2_merge(
                 # (r13)
                 source_unique=True,
                 # first_ts has at most one row per surviving ch key
-                source_broadcast=ch_rows <= MERGE_BROADCAST_ROWS,
+                source_rows=ch_rows,
             )
         if applied:
             if not table.exists():

@@ -15,9 +15,7 @@ against Kafka/files with real triggers — nothing here is test-only.
 
 from __future__ import annotations
 
-import datetime as _dt
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -303,6 +301,25 @@ def run_to_memory(
     return stream_df.sparkSession.table(name)
 
 
+def _drive_foreach_batch(
+    stream_df: DataFrame,
+    write_batch,
+    checkpoint_dir: str,
+    output_mode: str | None = None,
+) -> None:
+    """Run a foreachBatch sink over everything available now, then stop
+    the query (the engine's lakehouse sinks all drive their streams this
+    way)."""
+    w = stream_df.writeStream.foreachBatch(write_batch)
+    if output_mode is not None:
+        w = w.outputMode(output_mode)
+    q = w.option("checkpointLocation", checkpoint_dir).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def stream_to_lakehouse(
     stream_df: DataFrame,
     catalog,
@@ -320,15 +337,7 @@ def stream_to_lakehouse(
             df, namespace, table, partition_month_of=partition_month_of
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_foreach_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def stream_to_lakehouse_gated(
@@ -379,15 +388,7 @@ def stream_to_lakehouse_gated(
         )
         report["committed"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_foreach_batch(stream_df, write_batch, checkpoint_dir)
     return report
 
 
@@ -433,15 +434,7 @@ def stream_scd2_to_lakehouse(
         if r["applied"]:
             report["committed_epochs"] += 1
 
-    q_ = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q_.processAllAvailable()
-    finally:
-        q_.stop()
+    _drive_foreach_batch(stream_df, write_batch, checkpoint_dir)
     return report
 
 
@@ -484,15 +477,7 @@ def stream_quantile_sketch_to_lakehouse(
         report["sketch_version"] = r["version"]
         report["committed_epochs"] += 1
 
-    q_ = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q_.processAllAvailable()
-    finally:
-        q_.stop()
+    _drive_foreach_batch(stream_df, write_batch, checkpoint_dir)
     return report
 
 
@@ -548,15 +533,7 @@ def stream_dedup_ingest_to_lakehouse(
             report["rows_ingested"] += r["ingested"]
             report["committed_epochs"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_foreach_batch(stream_df, write_batch, checkpoint_dir)
     return report
 
 
@@ -822,16 +799,9 @@ def stream_upsert_to_lakehouse(
         finally:
             unpersist_checkpoint(df)
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drive_foreach_batch(
+        stream_df, write_batch, checkpoint_dir, output_mode
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_lakehouse_appends(

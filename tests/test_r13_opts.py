@@ -321,49 +321,8 @@ def test_diff_dml_replay_unpartitioned(spark, tmp_path):
     assert _symdiff(t.diff(v1, v3), _generic_diff(t, v1, v3)) == 0
 
 
-# --- batch 2 (r13 continuation): merge source broadcast, probe-free
-# unpartitioned DML no-op, fused CC rounds, pair filter-before-dedup ---
-
-
-def test_merge_source_broadcast_hint_and_equivalence(spark, tmp_path):
-    """merge_into(source_broadcast=True) must (a) put an explicit
-    broadcast on every source-derived join even when size estimation
-    would pick SMJ, and (b) change nothing about the merge's output."""
-    from spark_iceberg_schema_evolution_spark.tables import LakehouseTable
-
-    tgt = spark.range(0, 200).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    src = spark.range(100, 260).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    args = dict(
-        matched_update={"v": "s.v + t.v"},
-        matched_condition="s.v % 2 = 0",
-        matched_delete_where="s.v % 37 = 0",
-        insert_unmatched=True,
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hinted = LakehouseTable._apply_merge_clauses(
-            tgt, src, tgt.schema, ["k"], args["matched_update"],
-            args["matched_condition"], args["matched_delete_where"],
-            True, source_broadcast=True,
-        )
-        unhinted = LakehouseTable._apply_merge_clauses(
-            tgt, src, tgt.schema, ["k"], args["matched_update"],
-            args["matched_condition"], args["matched_delete_where"],
-            True, source_broadcast=False,
-        )
-        # with auto-broadcast off, only the HINT can produce BHJs
-        assert explain.has_broadcast_join(hinted)
-        assert not explain.has_broadcast_join(unhinted)
-        assert sorted(map(tuple, hinted.collect())) == sorted(
-            map(tuple, unhinted.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+# --- batch 2: fused CC rounds, pair filter-before-dedup (the merge
+# source broadcast pin lives in tests/test_tables.py) ---
 
 
 def test_connected_components_one_checkpoint_per_round(spark):

@@ -3,63 +3,16 @@
 Same discipline as tests/test_r13_opts.py: each pin holds one r14
 change at the level that matters — exact-output equivalence for the
 semantics-preserving rewrites, behavioral gates for the scale-safety
-fixes (determinism-by-analysis replay provenance, deduplicated merge
-broadcast keys). The probe-gated DML pin lives in tests/test_tables.py
-and the SCD2 broadcast-bound pin in tests/test_scd.py.
+fixes (determinism-by-analysis replay provenance). The probe-gated DML
+pin and the deduplicated merge broadcast keys pin live in
+tests/test_tables.py, the SCD2 broadcast-bound pin in tests/test_scd.py.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-from spark_iceberg_schema_evolution_spark.plans import explain
-from spark_iceberg_schema_evolution_spark.tables import (
-    LakehouseCatalog,
-    LakehouseTable,
-)
-
-
-# --- VERDICT r13 #8: NOT MATCHED broadcast keys are deduplicated ------------
-
-
-def test_merge_insert_broadcast_keys_distinct_on_dup_key_target(spark):
-    """A duplicate-key target (legal when there is no update arm) must
-    not inflate the NOT MATCHED probe's broadcast beyond source distinct
-    keys — matched_keys is distinct'd before F.broadcast — and the
-    insert arm's output must be identical to the unhinted plan's."""
-    # 50 distinct keys, each duplicated 40x in the target
-    tgt = (
-        spark.range(0, 50)
-        .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-        .crossJoin(spark.range(40).select(F.lit(1).alias("__x")))
-        .drop("__x")
-    )
-    src = spark.range(25, 75).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hinted = LakehouseTable._apply_merge_clauses(
-            tgt, src, tgt.schema, ["k"], None, None, None, True,
-            source_broadcast=True,
-        )
-        unhinted = LakehouseTable._apply_merge_clauses(
-            tgt, src, tgt.schema, ["k"], None, None, None, True,
-            source_broadcast=False,
-        )
-        plan = explain.physical_plan(hinted)
-        # the probe is still a broadcast anti-join (no shuffled target
-        # keys), and its build side now carries a distinct aggregate
-        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-        assert sorted(map(tuple, hinted.collect())) == sorted(
-            map(tuple, unhinted.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
 
 
 # --- VERDICT r13 #6: replay provenance is determinism-by-analysis ----------

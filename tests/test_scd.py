@@ -208,5 +208,5 @@ def test_scd2_broadcast_bound_uses_pre_hit_frame(spark, tmp_path):
     ), mock.patch.object(t, "merge_into", spy):
         rep = scd2_merge(t, changes, keys=["k"], change_ts="ts")
     assert rep["applied"] == 0  # the undercounting quantity
-    # bound from the pre-__hit frame (1 row) vs ceiling 0: no broadcast
-    assert captured.get("source_broadcast") is False
+    # bound from the pre-__hit frame (1 row), over the ceiling of 0
+    assert captured["source_rows"] == 1

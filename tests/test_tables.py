@@ -1622,6 +1622,50 @@ def test_partition_evolution_cow_dml_carries_foreign_rows(spark, catalog):
     assert t.read().count() == 15
 
 
+def test_partition_evolution_cow_null_timestamp_keeps_foreign_rows(
+    spark, catalog
+):
+    # a NULL partition timestamp lies in no month, so a merge source or
+    # a DML match holding one cannot be month-scoped: the rewrite must
+    # still keep every foreign-layout row outside the change
+    catalog.write_evolving(_pe_df(spark, 2024, 1, 6), "db", "pen")
+    t = catalog.table("db", "pen")
+    t.append(_pe_df(spark, 2024, 2, 6, base=100))
+    t.set_partition_spec("ts")
+    src = spark.createDataFrame(
+        [(0, None, 50.0), (300, datetime.datetime(2024, 1, 9), 60.0)],
+        "id long, ts timestamp, v double",
+    )
+    t.merge_into(src, on=["id"], matched_update={"v": "s.v"})
+    rows = {r.id: r.v for r in t.read().collect()}
+    assert sorted(rows) == [*range(6), *range(100, 106), 300]
+    assert rows[0] == 50.0 and rows[300] == 60.0 and rows[101] == 1.0
+    t.set_partition_spec(None)
+    t.append(
+        spark.createDataFrame(
+            [(901, None, 9.0), (902, datetime.datetime(2024, 2, 20), 9.0)],
+            "id long, ts timestamp, v double",
+        )
+    )
+    t.set_partition_spec("ts")
+    t.delete_where("ts IS NULL OR id < 2")
+    ids = sorted(r.id for r in t.read().collect())
+    assert ids == [*range(2, 6), *range(100, 106), 300, 902]
+
+
+def test_dml_rejects_missing_condition(spark, catalog):
+    catalog.write_evolving(
+        spark.createDataFrame([(1, 1.0)], ["id", "v"]), "db", "dnc"
+    )
+    t = catalog.table("db", "dnc")
+    before = t._load().version
+    with pytest.raises(ValueError, match="needs a condition"):
+        t.delete_where(None)
+    with pytest.raises(ValueError, match="needs a condition"):
+        t.update_where(None, {"v": "v + 1"})
+    assert t._load().version == before
+
+
 def test_partition_evolution_overwrite_keeps_foreign_out_of_scope(
     spark, catalog
 ):
@@ -3132,3 +3176,235 @@ def test_scan_relation_memo_reuses_and_stays_correct(spark, tmp_path):
     assert kept.count() == o.where("o_orderstatus <> 'F'").count()
     # cache stays bounded
     assert len(MT._SCAN_RELATION_CACHE) <= MT._SCAN_RELATION_CACHE_MAX
+
+
+# --- the MERGE core: one clause compiler behind COW and MOR ------------------
+
+_MERGE_BASE = [
+    (1, "2024-01-05", 10), (2, "2024-01-20", 20), (3, "2024-02-05", 30),
+    (4, "2024-02-15", 40), (5, "2024-02-25", 50), (6, "2024-03-05", 60),
+]
+# (variant, source rows (id, ts, v, op), merge_into clauses)
+_MERGE_VARIANTS = [
+    ("update-all + insert",
+     [(1, "2024-01-07", 11, "U"), (7, "2024-03-01", 70, "I")], {}),
+    ("dict update with matched_condition",
+     [(2, "2024-01-20", 5, "U"), (3, "2024-02-05", 6, "X")],
+     dict(matched_update={"v": "t.v + s.v"}, matched_condition="s.op = 'U'")),
+    ("delete arm",
+     [(4, "2024-02-15", 0, "D"), (5, "2024-02-25", 55, "U"),
+      (8, "2024-03-09", 80, "I")],
+     dict(matched_update={"v": "s.v"}, matched_delete_where="s.op = 'D'")),
+    ("insert-only",
+     [(1, "2024-01-01", -1, "I"), (9, "2024-01-09", 90, "I")],
+     dict(matched_update=None)),
+    ("update-only without insert",
+     [(2, "2024-01-21", 22, "U"), (10, "2024-03-10", 100, "I")],
+     dict(insert_unmatched=False)),
+    ("partition-moving update", [(3, "2024-04-02", 33, "U")], {}),
+]
+
+
+@pytest.mark.parametrize("month_of", [None, "ts"])
+def test_merge_cow_and_mor_agree(spark, catalog, month_of):
+    """COW and MOR compile their clauses once, in one place: on a
+    unique-key table every clause variant leaves both modes reading the
+    same rows, partitioned and unpartitioned."""
+    tables = {}
+    for mode in ("cow", "mor"):
+        name = f"{mode}_{month_of or 'flat'}"
+        catalog.write_evolving(
+            _mk_part(spark, _MERGE_BASE), "db", name,
+            partition_month_of=month_of,
+        )
+        tables[mode] = catalog.table("db", name)
+    for variant, rows, clauses in _MERGE_VARIANTS:
+        src = spark.createDataFrame(
+            rows, ["id", "ts", "v", "op"]
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        got = {}
+        for mode, t in tables.items():
+            t.merge_into(src, on=["id"], mode=mode, **clauses)
+            got[mode] = sorted(map(tuple, t.read().collect()))
+        assert got["cow"] == got["mor"], variant
+    final = {r.id: r.v for r in tables["cow"].read().collect()}
+    assert final == {1: 11, 2: 22, 3: 33, 5: 55, 6: 60, 7: 70, 8: 80, 9: 90}
+    if month_of:
+        for t in tables.values():
+            assert [r.id for r in t.read(months=["2024-04"]).collect()] == [3]
+
+
+def test_merge_empty_source_commits_nothing(spark, catalog):
+    """An empty source changes no row, so the merge commits no snapshot:
+    the month-partitioned COW merge learns it from its month probe (each
+    source row brings its month, NULL timestamps included), MOR from its
+    empty writes, and any layout from a counted ``source_rows=0``
+    without a scan."""
+    from unittest import mock
+
+    rows = _mk_part(spark, [(1, "2024-01-05", 10), (2, "2024-02-05", 20)])
+    catalog.write_evolving(rows, "db", "ep", partition_month_of="ts")
+    catalog.write_evolving(rows, "db", "eu")
+    empty = rows.limit(0)
+    for name in ("ep", "eu"):
+        t = catalog.table("db", name)
+        snap = t._load()
+        if name == "ep":
+            assert t.merge_into(empty, on=["id"]) == snap.version
+        assert t.merge_into(empty, on=["id"], mode="mor") == snap.version
+
+        def boom(*a, **k):
+            raise AssertionError("a counted empty source must not scan")
+
+        with mock.patch.object(t, "_scan", boom):
+            assert (
+                t.merge_into(empty, on=["id"], source_rows=0)
+                == snap.version
+            )
+        assert t._load().version == snap.version
+        assert t._load().batches == snap.batches
+        assert sorted((r.id, r.v) for r in t.read().collect()) == [
+            (1, 10), (2, 20)
+        ]
+
+
+def test_merge_rollup_shape_job_count(spark, catalog):
+    """The rollup refresh's merge shape (the corpus ingest runs one per
+    night): unpartitioned target, a measured source under the broadcast
+    ceiling, ``source_unique``, a delete arm plus a dict update, and
+    inserts. Its job count is pinned (5 in this session): the one
+    source broadcast is reused by every join derived from the source, so
+    a plan that builds a second one shows here as one more job."""
+    from tests.conftest import _jobs_in
+
+    catalog.write_evolving(
+        spark.createDataFrame(
+            [("1-URGENT", 3, 300), ("2-HIGH", 2, 70), ("3-MEDIUM", 1, 10)],
+            ["pri", "n_rows", "sum_c"],
+        ),
+        "db", "roll",
+    )
+    t = catalog.table("db", "roll")
+    delta = spark.createDataFrame(
+        [("1-URGENT", 2, 20), ("3-MEDIUM", -1, -10), ("9-NEW", 4, 40)],
+        ["pri", "n_rows", "sum_c"],
+    ).localCheckpoint()
+    _v, jobs = _jobs_in(spark, "merge-rollup-shape", lambda: t.merge_into(
+        delta, on=["pri"],
+        matched_delete_where="t.n_rows + s.n_rows = 0",
+        matched_update={
+            "n_rows": "t.n_rows + s.n_rows", "sum_c": "t.sum_c + s.sum_c",
+        },
+        insert_unmatched=True,
+        source_unique=True,
+        source_rows=3,
+    ))
+    assert sorted(map(tuple, t.read().collect())) == [
+        ("1-URGENT", 5, 320), ("2-HIGH", 2, 70), ("9-NEW", 4, 40)
+    ]
+    assert len(jobs) == 5
+
+
+def _merged_frame(t, **merge_args):
+    """Run ``t.merge_into`` and return the merged frame it wrote."""
+    from unittest import mock
+
+    seen = []
+    real = t._write_batch
+
+    def spy(df, *a, **k):
+        seen.append(df)
+        return real(df, *a, **k)
+
+    with mock.patch.object(t, "_write_batch", spy):
+        t.merge_into(**merge_args)
+    [df] = seen
+    return df
+
+
+def test_merge_source_broadcast_hint_and_equivalence(spark, catalog):
+    """A measured ``source_rows`` under the merge's ceiling must (a) put
+    an explicit broadcast on every source-derived join even when size
+    estimation would pick SMJ, and (b) change nothing about the merge's
+    output; a count over the ceiling takes the shuffle path."""
+    from spark_iceberg_schema_evolution_spark.plans import explain
+    from spark_iceberg_schema_evolution_spark.tables import (
+        MERGE_BROADCAST_ROWS,
+    )
+
+    tgt = spark.range(0, 200).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    src = spark.range(100, 260).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    args = dict(
+        source=src,
+        on=["k"],
+        matched_update={"v": "s.v + t.v"},
+        matched_condition="s.v % 2 = 0",
+        matched_delete_where="s.v % 37 = 0",
+        insert_unmatched=True,
+        source_unique=True,
+    )
+    catalog.write_evolving(tgt, "db", "bh")
+    catalog.write_evolving(tgt, "db", "bu")
+    hinted_t, unhinted_t = catalog.table("db", "bh"), catalog.table("db", "bu")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hinted = _merged_frame(hinted_t, source_rows=160, **args)
+        unhinted = _merged_frame(
+            unhinted_t, source_rows=MERGE_BROADCAST_ROWS + 1, **args
+        )
+        # with auto-broadcast off, only the HINT can produce BHJs
+        assert explain.has_broadcast_join(hinted)
+        assert not explain.has_broadcast_join(unhinted)
+        assert sorted(map(tuple, hinted.collect())) == sorted(
+            map(tuple, unhinted.collect())
+        )
+        assert sorted(map(tuple, hinted_t.read().collect())) == sorted(
+            map(tuple, unhinted_t.read().collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_merge_insert_broadcast_keys_distinct_on_dup_key_target(
+    spark, catalog
+):
+    """A duplicate-key target (legal when there is no update arm) must
+    not inflate the NOT MATCHED probe's broadcast beyond source distinct
+    keys — matched_keys is distinct'd before F.broadcast — and the
+    insert arm's output must be identical to the unhinted plan's."""
+    from spark_iceberg_schema_evolution_spark.plans import explain
+
+    # 50 distinct keys, each duplicated 40x in the target
+    tgt = (
+        spark.range(0, 50)
+        .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        .crossJoin(spark.range(40).select(F.lit(1).alias("__x")))
+        .drop("__x")
+    )
+    src = spark.range(25, 75).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    catalog.write_evolving(tgt, "db", "dh")
+    catalog.write_evolving(tgt, "db", "du")
+    args = dict(source=src, on=["k"], matched_update=None)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hinted = _merged_frame(
+            catalog.table("db", "dh"), source_rows=50, **args
+        )
+        unhinted = _merged_frame(catalog.table("db", "du"), **args)
+        plan = explain.physical_plan(hinted)
+        # the probe is still a broadcast anti-join (no shuffled target
+        # keys), and its build side now carries a distinct aggregate
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert sorted(map(tuple, hinted.collect())) == sorted(
+            map(tuple, unhinted.collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

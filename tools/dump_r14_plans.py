@@ -1,6 +1,8 @@
 """Dump the r14-touched sub-plans (rollup refresh delta, broadcast merge)
-to plans/r14/<name>_<tag>.txt. Run with tag=before in a worktree at the
-round-start commit and tag=after on the optimized tree:
+to plans/r14/<name>_<tag>.txt. Run it from the root of the tree whose
+engine it should use (it imports the package from the working
+directory), e.g. with tag=before in a checkout of an older commit and
+tag=after on the current tree, then diff the two files:
 
     python tools/dump_r14_plans.py after [outdir]
 """
@@ -67,22 +69,34 @@ def main() -> None:
     changes = diff_fn(last_src, src_v)
     dump("q130_refresh_delta", _delta_agg(changes, ["pri"], ["price_c"]))
 
-    # (2) the broadcast MERGE plan (update+delete arms + insert)
-    from spark_iceberg_schema_evolution_spark.tables import LakehouseTable
+    # (2) the broadcast MERGE plan (update+delete arms + insert), as the
+    # rollup refresh runs it: captured from the merge's own write.
+    from unittest import mock
 
     delta = spark.createDataFrame(
         [("1-URGENT", 5, 500), ("9-NEW", 2, 70)],
         ["pri", "n_rows", "sum_price_c"],
     )
-    target = dst.read()
-    merged = LakehouseTable._apply_merge_clauses(
-        target, delta, target.schema, ["pri"],
-        {"n_rows": "t.n_rows + s.n_rows",
-         "sum_price_c": "t.sum_price_c + s.sum_price_c"},
-        None, "t.n_rows + s.n_rows = 0", True,
-        source_broadcast=True,
-    )
-    dump("q130_merge_broadcast", merged)
+    seen = []
+    real = dst._write_batch
+
+    def spy(df, *a, **k):
+        seen.append(df)
+        return real(df, *a, **k)
+
+    with mock.patch.object(dst, "_write_batch", spy):
+        dst.merge_into(
+            delta, ["pri"],
+            matched_update={
+                "n_rows": "t.n_rows + s.n_rows",
+                "sum_price_c": "t.sum_price_c + s.sum_price_c",
+            },
+            matched_delete_where="t.n_rows + s.n_rows = 0",
+            insert_unmatched=True,
+            source_unique=True,
+            source_rows=delta.count(),
+        )
+    dump("q130_merge_broadcast", seen[0])
 
 
 if __name__ == "__main__":
