@@ -631,8 +631,9 @@ _SIG_PROPS = (
 
 # the coverage bookmark of a signature store, set when the store is
 # known to sign every id of the corpus: the corpus data batches it
-# covers and the store version holding them (the rollup's
-# _SRC_PROP/_DST_PROP pair, here keyed on batches, not the corpus
+# covers and the store version holding them (the incremental
+# summaries' <kind>.source_version/target_version bookmark, operators/
+# rollup.py, here keyed on batches, not the corpus
 # version: a bloom-index build commits a corpus version adding no row)
 _COVERS_PROP = "sigs.corpus_batches"
 _AT_PROP = "sigs.store_version"

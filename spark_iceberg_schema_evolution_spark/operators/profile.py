@@ -13,7 +13,9 @@ string so heterogeneous column types coexist in one result.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+from .rollup import _check_pins, _refresh
 
 
 def profile_stats(
@@ -411,9 +413,6 @@ def sketch_quantiles(
     )
 
 
-_SKETCH_ALPHA_PROP = "sketch.alpha"
-
-
 def quantile_sketch_refresh(
     table,
     batch: DataFrame,
@@ -427,34 +426,23 @@ def quantile_sketch_refresh(
     (:func:`quantile_sketch_coarsen` — an integer sum, so the appended
     deltas are indistinguishable from a from-scratch build). First call
     creates the table and pins ``sketch.alpha``; later calls REFUSE a
-    drifted alpha (the grid would be incompatible) — the
-    signature-store reconciliation discipline applied to sketches."""
-    stored = (
-        table.properties().get(_SKETCH_ALPHA_PROP)
-        if table.exists()
-        else None
-    )
-    if stored is not None and float(stored) != float(alpha):
-        raise ValueError(
-            f"sketch alpha drift: table built at {stored}, "
-            f"refresh requested {alpha}; rebuild the rollup instead"
-        )
+    drifted alpha (the grid would be incompatible), with the pin check
+    of the bookmark protocol (``rollup._check_pins``)."""
+    pin = {"sketch.alpha": float(alpha)}
+    if table.exists():
+        _check_pins(table.properties(), pin, "rebuild the rollup instead")
     delta = quantile_sketch(batch, group_cols, value_col, alpha=alpha)
     if table.exists():
         version = table.append(delta)
     else:
         # pin alpha BEFORE the first append: a crash between append and
         # set_properties would leave a populated sketch whose next
-        # refresh at a different alpha passes the drift check (stored is
-        # None) and silently appends an incompatible bucket grid
+        # refresh at a different alpha passes the drift check (no pin)
+        # and silently appends an incompatible bucket grid
         table.create(delta.schema)
-        table.set_properties({_SKETCH_ALPHA_PROP: repr(float(alpha))})
+        table.set_properties(pin)
         version = table.append(delta)
     return {"version": version, "alpha": float(alpha)}
-
-
-_SKETCH_SRC_PROP = "sketch.source_version"
-_SKETCH_DST_PROP = "sketch.target_version"
 
 
 def refresh_quantile_sketch(
@@ -467,86 +455,43 @@ def refresh_quantile_sketch(
 ) -> int:
     """IVM-maintained quantile-sketch rollup of a SOURCE lakehouse
     table (the :func:`rollup.refresh_rollup` contract, for
-    percentiles): refresh from the source's row-level CDC since the
-    stored bookmark — inserts contribute +1 and deletes -1 to their
-    value's bucket, so the appended signed delta rows coarsen to
-    exactly the sketch of the current source under inserts, deletes,
-    AND updates (bucket counts are additive; net-zero rows are
-    harmless to the cumulative walk). Cost tracks the delta, never the
-    source.
-
-    Bookmark + crash discipline mirrors ``refresh_rollup``: the
-    (source_version, target_version) pair commits to the sketch
-    table's properties after the append; an out-of-sync pair raises
-    (rebuild with ``full_refresh=True``); a source version bump with
-    no row changes advances the bookmark without writing. Alpha is
-    pinned and drift refused, as in :func:`quantile_sketch_refresh`
-    (the batch-push face, for pipelines that hand the delta directly).
+    percentiles): the bookmark protocol of ``operators.rollup``
+    (properties ``sketch.*``, ``sketch.alpha`` pinned and drift
+    refused, as in :func:`quantile_sketch_refresh`, the batch-push
+    face). The delta is the signed bucket fold of
+    ``source.diff_additive`` since the bookmark — inserts contribute +1
+    and deletes -1 to their value's bucket — appended, so the stored
+    rows coarsen to exactly the sketch of the current source under
+    inserts, deletes, AND updates (bucket counts are additive; buckets
+    whose signed count cancels to 0 are not written). Cost tracks the
+    delta, never the source.
 
     Returns the sketch table's version."""
-    src_v = source._load().version
-    if full_refresh or not target.exists():
-        full = quantile_sketch(
-            source.read(), group_cols, value_col, alpha=alpha
+
+    def delta(last_src, src_v):
+        # the sign as the row weight, in the tag's own column (a source
+        # cannot hold a ``_change_type`` column: diff refuses it)
+        ch = source.diff_additive(last_src, src_v).withColumn(
+            "_change_type",
+            F.when(F.col("_change_type") == "I", F.lit(1)).otherwise(
+                F.lit(-1)
+            ),
         )
-        if target.exists():
-            v = target.overwrite(full)
-        else:
-            target.create(full.schema)
-            v = target.append(full, evolve=False)
-        target.set_properties({
-            _SKETCH_SRC_PROP: src_v,
-            _SKETCH_DST_PROP: v,
-            _SKETCH_ALPHA_PROP: repr(float(alpha)),
-        })
-        return v
-    props = target.properties()
-    stored = props.get(_SKETCH_ALPHA_PROP)
-    if stored is not None and float(stored) != float(alpha):
-        raise ValueError(
-            f"sketch alpha drift: table built at {stored}, "
-            f"refresh requested {alpha}; rebuild with full_refresh=True"
+        sk = quantile_sketch(
+            ch, group_cols, value_col, alpha=alpha, weight_col="_change_type"
         )
-    if _SKETCH_SRC_PROP not in props:
-        raise ValueError(
-            "target exists but is not an IVM sketch of anything "
-            f"({_SKETCH_SRC_PROP} missing); pass full_refresh=True"
-        )
-    last_src = int(props[_SKETCH_SRC_PROP])
-    expected_dst = int(props[_SKETCH_DST_PROP])
-    cur_dst = target._load().version
-    if cur_dst != expected_dst:
-        raise RuntimeError(
-            f"sketch state out of sync (sketch at v{cur_dst}, bookmark "
-            f"expects v{expected_dst}): a refresh crashed between append "
-            "and bookmark, or someone else wrote the sketch — rebuild "
-            "with full_refresh=True"
-        )
-    if last_src == src_v:
-        return cur_dst  # nothing new
-    ch = source.diff(last_src, src_v)
-    signed = F.when(F.col("_change_type") == "I", F.lit(1)).otherwise(
-        F.lit(-1)
+        return sk.where(F.col("n") != 0), src_v
+
+    return _refresh(
+        source,
+        target,
+        "sketch",
+        lambda rows: quantile_sketch(rows, group_cols, value_col, alpha=alpha),
+        delta,
+        lambda d, n: target.append(d, evolve=False),
+        full_refresh,
+        pins={"sketch.alpha": float(alpha)},
     )
-    v_, sgn, idx = _sketch_exprs(value_col, alpha)
-    delta = (
-        ch.where(v_.isNotNull())
-        .groupBy(*group_cols, sgn.alias("sgn"), idx.alias("bucket"))
-        .agg(F.sum(signed).alias("n"))
-        .where(F.col("n") != 0)
-    )
-    if delta.limit(1).count() == 0:
-        # metadata-only source commit or cancelling changes: advance
-        # the bookmark without touching the sketch
-        target.set_properties({
-            _SKETCH_SRC_PROP: src_v, _SKETCH_DST_PROP: cur_dst,
-        })
-        return cur_dst
-    v2 = target.append(delta, evolve=False)
-    target.set_properties({
-        _SKETCH_SRC_PROP: src_v, _SKETCH_DST_PROP: v2,
-    })
-    return v2
 
 
 def topk_sketch(
@@ -730,11 +675,6 @@ def sketch_band_filter(
     ).drop("__lo", "__hi")
 
 
-_HLL_SRC_PROP = "hll.source_version"
-_HLL_DST_PROP = "hll.target_version"
-_HLL_LGK_PROP = "hll.lg_k"
-
-
 def refresh_hll_rollup(
     source,
     target,
@@ -744,8 +684,9 @@ def refresh_hll_rollup(
     full_refresh: bool = False,
 ) -> int:
     """Incrementally maintain an :func:`hll_rollup` as a LAKEHOUSE
-    table: sketch ONLY the rows inserted since the stored bookmark and
-    append them; readers coarsen at query time (``hll_coarsen`` —
+    table by the bookmark protocol of ``operators.rollup`` (properties
+    ``hll.*``): sketch ONLY the rows inserted since the stored bookmark
+    and append them; readers coarsen at query time (``hll_coarsen`` —
     register-state union is order-independent, so appended deltas land
     on exactly the estimate a from-scratch build produces). Completes
     the IVM story for the mergeable-summary triple (counts/sums:
@@ -753,69 +694,52 @@ def refresh_hll_rollup(
     distincts: this).
 
     Honesty boundary, enforced loudly: HLL registers are max-folds — a
-    DELETE cannot be unseen. A delta containing 'D' rows raises
-    instead of silently over-counting; rebuild with
-    ``full_refresh=True`` (the rollup is O(groups), the rebuild scans
-    the source once). ``lg_k`` is pinned as a table property and drift
-    refused — sketches at different precisions must not be unioned
-    blindly. Bookmark/crash discipline mirrors ``refresh_rollup``."""
-    src_v = source._load().version
-    if full_refresh or not target.exists():
-        full = hll_rollup(source.read(), group_cols, distinct_col, lg_k)
-        if target.exists():
-            v = target.overwrite(full)
-        else:
-            target.create(full.schema)
-            v = target.append(full, evolve=False)
-        target.set_properties({
-            _HLL_SRC_PROP: src_v,
-            _HLL_DST_PROP: v,
-            _HLL_LGK_PROP: str(int(lg_k)),
-        })
-        return v
-    props = target.properties()
-    stored_k = props.get(_HLL_LGK_PROP)
-    if stored_k is not None and int(stored_k) != int(lg_k):
-        raise ValueError(
-            f"hll lg_k drift: table built at {stored_k}, refresh "
-            f"requested {lg_k}; rebuild with full_refresh=True"
+    DELETE cannot be unseen. A change span containing 'D' rows (the
+    reduced ``source.diff``, so a compaction's unchanged rows are not
+    deletes) raises before anything is written instead of silently
+    over-counting; rebuild with ``full_refresh=True`` (the rollup is
+    O(groups), the rebuild scans the source once). ``lg_k`` is pinned
+    as a table property and drift refused — sketches at different
+    precisions must not be unioned blindly."""
+    deletes = Observation()
+
+    def delta(last_src, src_v):
+        # one sketch row per (group, change type): a span with deletes
+        # yields rows the write refuses, even when it inserted nothing.
+        # The deletes are counted ABOVE the aggregate — an observation
+        # below its exchange is lost when adaptive execution drops an
+        # empty shuffle stage
+        rolled = hll_rollup(
+            source.diff(last_src, src_v),
+            [*group_cols, "_change_type"],
+            distinct_col,
+            lg_k,
         )
-    if _HLL_SRC_PROP not in props:
-        raise ValueError(
-            "target exists but is not an IVM hll rollup "
-            f"({_HLL_SRC_PROP} missing); pass full_refresh=True"
-        )
-    last_src = int(props[_HLL_SRC_PROP])
-    expected_dst = int(props[_HLL_DST_PROP])
-    cur_dst = target._load().version
-    if cur_dst != expected_dst:
-        raise RuntimeError(
-            f"hll rollup out of sync (rollup at v{cur_dst}, bookmark "
-            f"expects v{expected_dst}): a refresh crashed between "
-            "append and bookmark, or someone else wrote the rollup — "
-            "rebuild with full_refresh=True"
-        )
-    if last_src == src_v:
-        return cur_dst
-    ch = source.diff(last_src, src_v)
-    if ch.where("_change_type = 'D'").limit(1).count() > 0:
-        raise ValueError(
-            "source delta contains deletes: HLL sketches cannot unsee "
-            "rows; rebuild with full_refresh=True"
-        )
-    delta = hll_rollup(
-        ch.where("_change_type = 'I'"), group_cols, distinct_col, lg_k
+        return rolled.observe(
+            deletes,
+            F.count(F.when(F.col("_change_type") == "D", F.lit(1))).alias(
+                "d"
+            ),
+        ), src_v
+
+    def write(d, n):
+        if deletes.get["d"]:
+            raise ValueError(
+                "source delta contains deletes: HLL sketches cannot unsee "
+                "rows; rebuild with full_refresh=True"
+            )
+        return target.append(d.drop("_change_type"), evolve=False)
+
+    return _refresh(
+        source,
+        target,
+        "hll",
+        lambda rows: hll_rollup(rows, group_cols, distinct_col, lg_k),
+        delta,
+        write,
+        full_refresh,
+        pins={"hll.lg_k": int(lg_k)},
     )
-    if delta.limit(1).count() == 0:
-        target.set_properties({
-            _HLL_SRC_PROP: src_v, _HLL_DST_PROP: cur_dst,
-        })
-        return cur_dst
-    v2 = target.append(delta, evolve=False)
-    target.set_properties({
-        _HLL_SRC_PROP: src_v, _HLL_DST_PROP: v2,
-    })
-    return v2
 
 
 def skew_report(

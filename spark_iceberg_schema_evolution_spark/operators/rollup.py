@@ -1,54 +1,162 @@
-"""Incremental materialized rollup maintenance (IVM).
+"""Incremental summaries of lakehouse tables (IVM), behind one
+bookmark protocol.
 
-The hypertable-style continuous aggregate: a rollup table holding
-``GROUP BY <keys> -> COUNT(*), SUM(col)...`` over a source lakehouse
-table, refreshed INCREMENTALLY from the source's row-level CDC
-(``diff()``: I/D tagged rows) instead of recomputed from scratch. The
-delta math is the classic additive-aggregate IVM rule: each group's
-count moves by ``Σ(+1 for I, -1 for D)`` and each sum by the signed
-value total — exact for COUNT/SUM under inserts, deletes, AND updates
-(an update is one D and one I), which is why the rollup schema is
-restricted to additive aggregates. AVG derives as sum/count at query
-time; MIN/MAX are not incrementally maintainable under deletes without
-per-group history and are deliberately not offered.
+A summary table holds a small, mergeable aggregate of a SOURCE
+lakehouse table, refreshed INCREMENTALLY from the source's row-level
+CDC instead of recomputed. Three summaries share the protocol:
 
-Scale shape: the hash aggregate and the MERGE into the rollup track
-the DELTA size, but deriving the delta has two very different costs:
+- the rollup (:func:`refresh_rollup`): ``GROUP BY <keys> -> COUNT(*),
+  SUM(col)...`` by the additive IVM rule — a group's count moves by
+  ``Σ(+1 for I, -1 for D)`` and each sum by the signed value total,
+  exact under inserts, deletes AND updates (one D and one I) — MERGEd
+  into the rollup. AVG derives as sum/count at query time; MIN/MAX
+  need per-group history under deletes and are not offered;
+- the quantile sketch (``profile.refresh_quantile_sketch``): signed
+  DDSketch bucket counts, appended;
+- the HLL rollup (``profile.refresh_hll_rollup``): register sketches
+  of the inserted rows, appended; registers cannot unsee a row, so a
+  span with deletes is refused.
 
-- ``source.diff(a, b)`` (the generic path) is two ``exceptAll``s —
-  FOUR snapshot scans with full-row shuffles. Correct for arbitrary
-  writers, but O(source) per refresh: the r11 streaming probe
-  (tools/probe_r11_streaming.py) measured it at 5-6x the MERGE's own
-  cost per epoch at 10M rows, growing with the corpus.
-- ``delta_hint`` (the fast path): a writer that KNOWS its own change
-  set — the streaming upsert sink knows the epoch's batch is the
-  post-state of exactly its keys and the pre-merge rows of those keys
-  are the displaced state — passes the I/D frame directly. One
-  semi-join scan of the source instead of four full scans; the
-  bookmark still gates it (the hint is accepted only when it starts
-  at the bookmarked version, so a crash-replay gap falls back to the
-  diff path, never double-counts, never skips).
+The protocol (:func:`_refresh`). The summary's table properties hold
+the bookmark — ``<kind>.source_version``, the last source version
+folded in, and ``<kind>.target_version``, the summary version that
+fold committed (kind ``rollup``, ``sketch`` or ``hll``) — and the
+layout parameters it was built at (``sketch.alpha``, ``hll.lg_k``).
+A refresh (1) builds the whole summary from one source read when the
+target is new or ``full_refresh`` is asked for; otherwise (2) refuses
+a drifted parameter, a target without a bookmark, and a target whose
+version is not the bookmarked one (a refresh crashed between its
+write and its bookmark, or someone else wrote the summary: the next
+delta would double-apply or go missing — rebuild with
+``full_refresh=True``); (3) folds the change since the bookmark into
+a delta frame and materializes it ONCE (local checkpoint — the delta
+is tiny, its change-bag lineage is the expensive part and the write
+would re-run it), counting its rows with an Observation on the same
+action; an empty delta (a metadata-only commit, or changes that
+cancel) advances the bookmark without writing; (4) writes the delta,
+THEN the bookmark, so a crash between the two is caught by (2).
+Single-writer, like the lakehouse commit protocol (tables.py).
 
-A 100 TB source with a 1 GB daily delta refreshes by scanning the
-delta (hint path) or the snapshots (generic path), exactly like a
-TimescaleDB continuous aggregate or a Materialize arrangement.
-
-Consistency: the refresh bookmark (source version + expected rollup
-version) lives in the rollup's table properties and is written AFTER
-the merge commit. A crash between the two leaves the pair out of sync;
-the next refresh detects it and raises instead of double-applying a
-delta — rebuild with ``full_refresh=True``. Single-writer, like the
-lakehouse commit protocol itself (tables.py module docstring).
+The change bag: the signed folds (rollup, quantile sketch) read
+``source.diff_additive`` — I and D rows not reduced against each
+other, diff()'s exact signed multiplicity per row value without its
+two ``exceptAll`` shuffles. The HLL fold reads the reduced
+``source.diff``: it refuses real deletes, and the additive bag reports
+a compaction's unchanged rows as D+I pairs. A writer that knows its
+own change set passes the rollup a ``delta_hint`` instead (one
+semi-join scan, not the diff's snapshot scans; the r11 streaming
+probe measured the generic diff at 5-6x the MERGE's cost per epoch at
+10M rows) — gated by the bookmark like every other delta.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..checkpoint import unpersist_checkpoint
 
-_SRC_PROP = "rollup.source_version"
-_DST_PROP = "rollup.target_version"
+# the wording each summary's errors have always used, by bookmark kind:
+# (what a target without a bookmark "is not", the out-of-sync subject,
+# the summary's noun, the write its bookmark follows)
+_WORDS = {
+    "rollup": ("a rollup of anything", "rollup state", "rollup", "merge"),
+    "sketch": (
+        "an IVM sketch of anything", "sketch state", "sketch", "append",
+    ),
+    "hll": ("an IVM hll rollup", "hll rollup", "rollup", "append"),
+}
+
+
+def _check_pins(
+    props: dict, pins: dict, remedy: str = "rebuild with full_refresh=True"
+) -> None:
+    """Refuse a refresh whose layout parameter (``{property: value}``,
+    e.g. ``sketch.alpha``) differs from the one the target was built
+    at: sketches on different grids must not be merged."""
+    for prop, want in pins.items():
+        stored = props.get(prop)
+        if stored is not None and type(want)(stored) != want:
+            raise ValueError(
+                f"{prop.replace('.', ' ')} drift: table built at {stored}, "
+                f"refresh requested {want}; {remedy}"
+            )
+
+
+def _bookmark(target, kind: str, props: dict) -> tuple[int, int]:
+    """``(bookmarked source version, target version)`` of a ``kind``
+    summary; raises on a target without a bookmark and on one whose
+    version is not the bookmarked one (step 2 of the protocol)."""
+    what, subject, noun, write = _WORDS[kind]
+    src_prop = f"{kind}.source_version"
+    if src_prop not in props:
+        raise ValueError(
+            f"target exists but is not {what} ({src_prop} missing); "
+            "pass full_refresh=True to adopt it"
+        )
+    expected_dst = int(props[f"{kind}.target_version"])
+    cur_dst = target._load().version
+    if cur_dst != expected_dst:
+        raise RuntimeError(
+            f"{subject} out of sync ({noun} at v{cur_dst}, bookmark "
+            f"expects v{expected_dst}): a refresh crashed between {write} "
+            f"and bookmark, or someone else wrote the {noun} — rebuild "
+            "with full_refresh=True"
+        )
+    return int(props[src_prop]), cur_dst
+
+
+def _refresh(
+    source,
+    target,
+    kind: str,
+    full,
+    delta,
+    write,
+    full_refresh: bool,
+    pins: dict | None = None,
+) -> int:
+    """Create or refresh the ``kind`` summary of ``source`` in
+    ``target`` by the bookmark protocol (module docstring); returns the
+    target's version. The caller supplies what differs:
+
+    - ``full(rows)``: the whole summary of the source rows ``rows``;
+    - ``delta(last_src, src_v)``: ``(frame, to_version)`` — the summary
+      of the change since the bookmark (no rows when the change folds
+      to nothing) and the source version the bookmark advances to;
+    - ``write(frame, n)``: commits the materialized ``n``-row delta
+      and returns the target's new version;
+    - ``pins``: layout parameters, ``{property: value}``."""
+    pins = pins or {}
+    src_prop, dst_prop = f"{kind}.source_version", f"{kind}.target_version"
+    src_v = source._load().version
+    if full_refresh or not target.exists():
+        frame = full(source.read())
+        if target.exists():
+            v = target.overwrite(frame)
+        else:
+            target.create(frame.schema)
+            v = target.append(frame, evolve=False)
+        target.set_properties({src_prop: src_v, dst_prop: v, **pins})
+        return v
+    props = target.properties()
+    _check_pins(props, pins)
+    last_src, cur_dst = _bookmark(target, kind, props)
+    if last_src == src_v:
+        return cur_dst  # nothing new
+    frame, src_v = delta(last_src, src_v)
+    # the emptiness probe rides the checkpoint's own action (r13): a
+    # separate limit(1).count() would re-run the whole change lineage
+    obs = Observation()
+    frame = frame.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    try:
+        n = obs.get["n"] or 0
+        v = write(frame, n) if n else cur_dst
+        target.set_properties({src_prop: src_v, dst_prop: v})
+        return v
+    finally:
+        unpersist_checkpoint(frame)
 
 
 def _delta_agg(
@@ -75,10 +183,13 @@ def refresh_rollup(
 ) -> int:
     """Create or incrementally refresh ``target`` as the materialized
     ``GROUP BY group_cols -> n_rows, sum_<c>...`` of ``source`` (both
-    ``LakehouseTable``). Returns the rollup's version (unchanged when
-    the source hasn't moved). Group columns must be non-null — NULL
-    group keys would silently miss the MERGE join and duplicate
-    groups, so the delta path refuses them loudly.
+    ``LakehouseTable``) by the bookmark protocol (module docstring,
+    properties ``rollup.*``): the signed fold of
+    ``source.diff_additive`` since the bookmark, MERGEd into the
+    rollup. Returns the rollup's version (unchanged when the source
+    hasn't moved or its change cancels out). Group columns must be
+    non-null — NULL group keys would silently miss the MERGE join and
+    duplicate groups, so the delta path refuses them loudly.
 
     ``delta_hint`` + ``hint_from_version`` + ``hint_to_version``: a
     writer that knows its own change set (I/D-tagged rows, ``diff()``'s
@@ -87,19 +198,18 @@ def refresh_rollup(
     hint is used only when ``hint_from_version`` equals the rollup's
     bookmarked source version — i.e. the rollup saw every commit up to
     where the hint starts; otherwise (a crash between a merge and its
-    refresh left a gap) the generic ``source.diff(bookmark, head)``
-    path runs, which is always correct. ``hint_to_version`` is
-    REQUIRED with a hint (ADVICE r11): the bookmark advances exactly
-    to it, never past it to the current head — a commit landing
-    between the hint's derivation and this refresh (a concurrent
-    writer; anything the hint doesn't cover) is left for the NEXT
-    refresh's diff instead of being silently and permanently excluded.
-    A writer-asserted content-no-op commit (inline compaction) is
-    advanced over with :func:`advance_bookmark_noop`. The hint frame
-    MUST be pinned to pre-change snapshots (lakehouse reads bind their
-    file list at ``read()`` time, so a frame built before the commit
-    stays valid). Cost: O(hint) instead of diff's four snapshot scans
-    (see module docstring; measured 5-6x per epoch at 10M rows)."""
+    refresh left a gap) the generic change-bag path runs, which is
+    always correct. ``hint_to_version`` is REQUIRED with a hint
+    (ADVICE r11): the bookmark advances exactly to it, never past it to
+    the current head — a commit landing between the hint's derivation
+    and this refresh (a concurrent writer; anything the hint doesn't
+    cover) is left for the NEXT refresh's diff instead of being
+    silently and permanently excluded. A writer-asserted
+    content-no-op commit (inline compaction) is advanced over with
+    :func:`advance_bookmark_noop`. The hint frame MUST be pinned to
+    pre-change snapshots (lakehouse reads bind their file list at
+    ``read()`` time, so a frame built before the commit stays valid).
+    Cost: O(hint) instead of the diff's snapshot scans."""
     if not group_cols:
         raise ValueError("need at least one group column")
     if delta_hint is not None and hint_to_version is None:
@@ -110,87 +220,34 @@ def refresh_rollup(
             "skip any commit the hint does not cover"
         )
     sum_cols = sum_cols or []
-    src_v = source._load().version
-    if full_refresh or not target.exists():
-        full = _delta_agg(
-            source.read().withColumn("_change_type", F.lit("I")),
-            group_cols,
-            sum_cols,
-        )
-        if target.exists():
-            v = target.overwrite(full)
-        else:
-            target.create(full.schema)
-            v = target.append(full, evolve=False)
-        target.set_properties({_SRC_PROP: src_v, _DST_PROP: v})
-        return v
-    props = target.properties()
-    if _SRC_PROP not in props:
-        raise ValueError(
-            "target exists but is not a rollup of anything "
-            f"({_SRC_PROP} missing); pass full_refresh=True to adopt it"
-        )
-    last_src = int(props[_SRC_PROP])
-    expected_dst = int(props[_DST_PROP])
-    cur_dst = target._load().version
-    if cur_dst != expected_dst:
-        raise RuntimeError(
-            f"rollup state out of sync (rollup at v{cur_dst}, bookmark "
-            f"expects v{expected_dst}): a refresh crashed between merge "
-            "and bookmark, or someone else wrote the rollup — rebuild "
-            "with full_refresh=True"
-        )
-    if last_src == src_v:
-        return cur_dst  # nothing new
-    if (
-        delta_hint is not None
-        and hint_from_version == last_src
-        and last_src < int(hint_to_version) <= src_v
-    ):
-        changes = delta_hint
-        # advance exactly to the hint's end, never past it: commits
-        # after hint_to_version stay pending for the next refresh's
-        # diff (ADVICE r11 — no silent exclusion window)
-        src_v = int(hint_to_version)
-    else:
-        # the additive (unreduced) change bag: per row value, #I − #D is
-        # EXACTLY diff()'s, which is all the signed _delta_agg fold
-        # reads — and the plan skips diff()'s two exceptAll shuffles
-        # (r14; see LakehouseTable.diff_additive's invariant)
-        changes = source.diff_additive(last_src, src_v)
-    delta = _delta_agg(changes, group_cols, sum_cols)
-    zero = F.col("n_rows") == 0
-    for c in sum_cols:
-        zero = zero & (F.col(f"sum_{c}") == 0)
-    # materialize ONCE: the aggregated delta is tiny (<= touched
-    # groups) but its LINEAGE is the expensive part — diff's snapshot
-    # scans or the hint's semi-join + the writer's dedup window — and
-    # both the empty-check below and the MERGE's matched/unmatched arms
-    # would re-run it otherwise (PROBES_r11 measured the re-evaluation
-    # at more than the merge's own epoch cost). The emptiness probe
-    # rides the SAME checkpoint action as an Observation (r13) — the
-    # separate limit(1).count() job per refresh was pure overhead.
-    from pyspark.sql import Observation
 
-    obs = Observation()
-    delta = (
-        delta.where(~zero)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        n_groups = obs.get["n"] or 0
-        if n_groups == 0:
-            # the source moved without changing rows (metadata-only
-            # commit: spec change, rename, property) or the changes
-            # cancelled out — advance the bookmark WITHOUT rewriting
-            # the rollup
-            target.set_properties({_SRC_PROP: src_v, _DST_PROP: cur_dst})
-            return cur_dst
+    def full(rows):
+        return _delta_agg(
+            rows.withColumn("_change_type", F.lit("I")), group_cols, sum_cols
+        )
+
+    def delta(last_src, src_v):
+        if (
+            delta_hint is not None
+            and hint_from_version == last_src
+            and last_src < int(hint_to_version) <= src_v
+        ):
+            # advance exactly to the hint's end, never past it: commits
+            # after hint_to_version stay pending for the next refresh's
+            # diff (ADVICE r11 — no silent exclusion window)
+            changes, src_v = delta_hint, int(hint_to_version)
+        else:
+            changes = source.diff_additive(last_src, src_v)
+        zero = F.col("n_rows") == 0
+        for c in sum_cols:
+            zero = zero & (F.col(f"sum_{c}") == 0)
+        return _delta_agg(changes, group_cols, sum_cols).where(~zero), src_v
+
+    def write(frame, n_groups):
         null_keys = F.lit(False)
         for g in group_cols:
             null_keys = null_keys | F.col(g).isNull()
-        checked = delta.withColumn(
+        checked = frame.withColumn(
             "n_rows",
             F.when(
                 null_keys,
@@ -202,7 +259,7 @@ def refresh_rollup(
         updates = {"n_rows": "t.n_rows + s.n_rows"}
         for c in sum_cols:
             updates[f"sum_{c}"] = f"t.sum_{c} + s.sum_{c}"
-        v = target.merge_into(
+        return target.merge_into(
             checked,
             on=group_cols,
             matched_delete_where="t.n_rows + s.n_rows = 0",
@@ -212,17 +269,14 @@ def refresh_rollup(
             # by construction, so the MERGE cardinality probe (one
             # aggregation job per refresh) proves nothing here (r13)
             source_unique=True,
-            # n_groups is the delta's MEASURED row count (the Observation
-            # riding the checkpoint): a touched-groups frame under the
-            # merge's broadcast ceiling skips every source-side shuffle
-            # instead of waiting for AQE to convert one materialized
-            # stage at a time (guide §3.1)
+            # the delta's MEASURED row count: a touched-groups frame
+            # under the merge's broadcast ceiling skips every
+            # source-side shuffle instead of waiting for AQE to convert
+            # one materialized stage at a time (guide §3.1)
             source_rows=n_groups,
         )
-        target.set_properties({_SRC_PROP: src_v, _DST_PROP: v})
-        return v
-    finally:
-        unpersist_checkpoint(delta)
+
+    return _refresh(source, target, "rollup", full, delta, write, full_refresh)
 
 
 def advance_bookmark_noop(source, target, to_version: int | None = None) -> int:
@@ -230,31 +284,21 @@ def advance_bookmark_noop(source, target, to_version: int | None = None) -> int:
     source commits the CALLER GUARANTEES changed no row content —
     delete-file compaction, data-file rewrite, property/spec changes.
     One property write, no scans: the alternative is the next
-    refresh's generic diff over a content-identical span (four
-    snapshot scans proving emptiness). The trust boundary is the
-    caller's, same as the single-writer commit protocol: asserting
-    this over a row-changing commit silently desyncs the rollup. The
-    streaming sink uses it to keep the ``delta_hint`` fast path hot
-    across its own inline ``compact_deletes``.
+    refresh's change bag over a content-identical span (snapshot scans
+    proving emptiness). The trust boundary is the caller's, same as the
+    single-writer commit protocol: asserting this over a row-changing
+    commit silently desyncs the rollup. The streaming sink uses it to
+    keep the ``delta_hint`` fast path hot across its own inline
+    ``compact_deletes``.
 
     Advances to ``to_version`` (default: the source head) and returns
     the rollup version. Never REWINDS the bookmark; raises on a
-    non-rollup target or an out-of-sync bookmark, exactly like
-    :func:`refresh_rollup`."""
-    props = target.properties()
-    if _SRC_PROP not in props:
-        raise ValueError(
-            f"target is not a rollup of anything ({_SRC_PROP} missing)"
-        )
-    expected_dst = int(props[_DST_PROP])
-    cur_dst = target._load().version
-    if cur_dst != expected_dst:
-        raise RuntimeError(
-            f"rollup state out of sync (rollup at v{cur_dst}, bookmark "
-            f"expects v{expected_dst}) — rebuild with full_refresh=True"
-        )
+    non-rollup target or an out-of-sync bookmark with
+    :func:`refresh_rollup`'s checks."""
+    last_src, cur_dst = _bookmark(target, "rollup", target.properties())
     to_v = int(to_version) if to_version is not None else source._load().version
-    if to_v <= int(props[_SRC_PROP]):
-        return cur_dst  # nothing to advance over
-    target.set_properties({_SRC_PROP: to_v, _DST_PROP: cur_dst})
+    if to_v > last_src:
+        target.set_properties({
+            "rollup.source_version": to_v, "rollup.target_version": cur_dst,
+        })
     return cur_dst

@@ -63,6 +63,29 @@ from spark_iceberg_schema_evolution_spark.types_map import datatype_to_str, str_
 
 _PART_COL = "__p_month"
 _BUCKET_COL = "__p_bucket"
+# the directory a NULL partition timestamp is written under; it reads
+# back as a NULL month
+_NULL_MONTH = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame | None:
+    """``unionByName`` of ``parts`` in order; None for no parts."""
+    if not parts:
+        return None
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _in_months(month, months: list[str]):
+    """Row filter keeping ``month`` (a ``yyyy-MM`` column) in the month
+    list ``months``. The NULL-timestamp month reads back as a NULL, which
+    no ``isin`` keeps: it is kept when, and only when, the list names
+    it, so every other plan is a plain ``isin``."""
+    keep = month.isin(months)
+    return keep | month.isNull() if _NULL_MONTH in months else keep
+
 
 # Row ceiling under which a MEASURED merge source (a delta whose row
 # count an Observation already produced) is broadcast: merge_into
@@ -1348,13 +1371,15 @@ class LakehouseTable:
                 # isin filter on the partition column — Spark prunes the
                 # non-hit month directories at planning time (84 months is
                 # 1 scan + pruning, not 84 scans).
-                df = df.where(F.col(_PART_COL).isin(hit)).drop(_PART_COL)
+                df = df.where(_in_months(F.col(_PART_COL), hit)).drop(
+                    _PART_COL
+                )
             elif b["months"] is not None:
                 # foreign-spec batch (partition evolution): its month list
                 # indexes its OWN physical layout, still authoritative for
                 # which of its directories are live
                 df = df.where(
-                    F.col(_PART_COL).isin(b["months"])
+                    _in_months(F.col(_PART_COL), b["months"])
                 ).drop(_PART_COL)
             df = self._replay_renames(df, b, snap)
             if months is not None and not prunable:
@@ -1362,9 +1387,12 @@ class LakehouseTable:
                 # couldn't be manifest-pruned, so filter row-level on the
                 # CURRENT spec column (post-rename names)
                 df = df.where(
-                    F.date_format(
-                        F.col(snap.partition_month_of), "yyyy-MM"
-                    ).isin(months)
+                    _in_months(
+                        F.date_format(
+                            F.col(snap.partition_month_of), "yyyy-MM"
+                        ),
+                        months,
+                    )
                 )
             part = align_schema(df, target, keep_extras=False)
             if part is df:
@@ -2966,7 +2994,10 @@ class LakehouseTable:
             version = self._next_version(snap)
             if new_rows is not None:
                 new_rows = new_rows.persist()  # probe + write: one eval
-            entry = self._write_delete_keys(snap, del_keys, list(on), version)
+            entry = self._write_delete_file(
+                del_keys, version, keys=list(on),
+                renames_at=len(snap.renames),
+            )
             batches = snap.batches
             if new_rows is not None and not new_rows.isEmpty():
                 batches = batches + [
@@ -3164,48 +3195,28 @@ class LakehouseTable:
             hits = also.select(month).unionByName(hits)
         return [r[0] for r in hits.distinct().collect()]
 
-    def _write_delete_keys(
-        self, snap: Snapshot, matched: DataFrame, keys: list[str], version: int
+    def _write_delete_file(
+        self, rows: DataFrame, version: int, **fields
     ) -> dict | None:
-        """Persist a distinct key-tuple DataFrame as an equality-delete
-        file; returns the manifest entry or None when empty. One output
-        file (same rationale as ``_write_pos_pairs``: every later scan
-        re-reads it)."""
-        path = self._claim_data_dir(f"delete-{version}")
-        matched.repartition(1).write.mode("overwrite").parquet(path)
-        _stats, _fstats, file_rows = self._footer_stats(path)
-        n = sum(file_rows.values())
-        if n == 0:
-            shutil.rmtree(path, ignore_errors=True)
-            return None
-        return {
-            "path": path,
-            "keys": keys,
-            "seq": version,
-            "renames_at": len(snap.renames),
-            "rows": n,
-        }
-
-    def _write_pos_pairs(
-        self, snap: Snapshot, matched: DataFrame, version: int
-    ) -> dict | None:
-        """Persist a matched-rows frame (carrying ``__file_path`` /
-        ``__row_pos``) as a position-delete file; None when empty."""
-        path = self._claim_data_dir(f"posdelete-{version}")
+        """Persist ``rows`` as a delete file of commit ``version`` —
+        position deletes (``fields`` ``content="pos"``, rows of
+        ``__file_path`` / ``__row_pos``) or equality deletes (``fields``
+        ``keys=[...]``, distinct key tuples) — and return its manifest
+        entry, ``fields`` included; None when ``rows`` is empty."""
+        kind = "posdelete" if fields.get("content") == "pos" else "delete"
+        path = self._claim_data_dir(f"{kind}-{version}")
         # one output file: delete files are small by construction and are
         # re-read by EVERY subsequent scan's anti-join — dozens of
         # scan-parallelism-shaped shards would tax each of those reads.
         # repartition (not coalesce: coalesce would collapse the matching
-        # scan's parallelism too) of the tiny pair set.
-        matched.select("__file_path", "__row_pos").repartition(1).write.mode(
-            "overwrite"
-        ).parquet(path)
+        # scan's parallelism too) of the tiny row set.
+        rows.repartition(1).write.mode("overwrite").parquet(path)
         _stats, _fstats, file_rows = self._footer_stats(path)
         n = sum(file_rows.values())
         if n == 0:
             shutil.rmtree(path, ignore_errors=True)
             return None
-        return {"path": path, "content": "pos", "seq": version, "rows": n}
+        return {"path": path, **fields, "seq": version, "rows": n}
 
     def delete_where(self, condition, mode: str = "cow", keys: list[str] | None = None) -> int:
         """DELETE FROM ... WHERE.
@@ -3393,11 +3404,15 @@ class LakehouseTable:
             matched = matched.persist()
         try:
             if keys:
-                entry = self._write_delete_keys(
-                    snap, matched.select(*keys).distinct(), keys, version
+                entry = self._write_delete_file(
+                    matched.select(*keys).distinct(), version, keys=keys,
+                    renames_at=len(snap.renames),
                 )
             else:
-                entry = self._write_pos_pairs(snap, matched, version)
+                entry = self._write_delete_file(
+                    matched.select("__file_path", "__row_pos"), version,
+                    content="pos",
+                )
             if entry is None:
                 return snap.version  # nothing matches: no new snapshot
             batches = snap.batches
@@ -3627,33 +3642,17 @@ class LakehouseTable:
             # row-equivalent (schema/rename/delete-file changes,
             # non-trim batch edits).
             old, new = scoped
-            if new is None and old is None:
-                return self.spark.createDataFrame(
-                    [],
-                    T.StructType(
-                        list(to_snap.schema.fields)
-                        + [T.StructField("_change_type", T.StringType())]
-                    ),
-                )
-            if old is None:
-                return new.withColumn("_change_type", F.lit("I"))
-            if new is None:
-                return old.withColumn("_change_type", F.lit("D"))
-            return (
-                new.exceptAll(old).withColumn("_change_type", F.lit("I"))
-            ).unionByName(
-                old.exceptAll(new).withColumn("_change_type", F.lit("D"))
-            )
+            if old is not None and new is not None:
+                old, new = old.exceptAll(new), new.exceptAll(old)
+            return self._change_bag(to_snap, old, new)
         old = align_schema(
             self.read(version=from_snap.version),
             to_snap.schema,
             keep_extras=False,
         )
         new = self.read(version=to_snap.version)
-        return (
-            new.exceptAll(old).withColumn("_change_type", F.lit("I"))
-        ).unionByName(
-            old.exceptAll(new).withColumn("_change_type", F.lit("D"))
+        return self._change_bag(
+            to_snap, old.exceptAll(new), new.exceptAll(old)
         )
 
     def diff_additive(
@@ -3687,24 +3686,32 @@ class LakehouseTable:
         scoped = self._diff_scope(from_snap, to_snap)
         if scoped is None:
             return self.diff(from_version, to_version)
-        old, new = scoped
-        parts = []
-        if new is not None:
-            parts.append(new.withColumn("_change_type", F.lit("I")))
-        if old is not None:
-            parts.append(old.withColumn("_change_type", F.lit("D")))
-        if not parts:
-            return self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(to_snap.schema.fields)
-                    + [T.StructField("_change_type", T.StringType())]
-                ),
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._change_bag(to_snap, *scoped)
+
+    def _change_bag(
+        self,
+        to_snap: Snapshot,
+        removed: DataFrame | None,
+        added: DataFrame | None,
+    ) -> DataFrame:
+        """The change-bag frame of :meth:`diff` / :meth:`diff_additive`:
+        ``added`` rows tagged I, then ``removed`` rows tagged D (None =
+        a provably empty side); the empty frame of ``to_snap``'s schema
+        when both sides are."""
+        out = _union_all([
+            df.withColumn("_change_type", F.lit(tag))
+            for df, tag in ((added, "I"), (removed, "D"))
+            if df is not None
+        ])
+        if out is not None:
+            return out
+        return self.spark.createDataFrame(
+            [],
+            T.StructType(
+                list(to_snap.schema.fields)
+                + [T.StructField("_change_type", T.StringType())]
+            ),
+        )
 
     def _diff_scope(
         self, from_snap: Snapshot, to_snap: Snapshot
@@ -3883,15 +3890,7 @@ class LakehouseTable:
             elif rec["op"] != "delete":
                 return None  # unknown op from a future writer: fall back
 
-        def fold(parts):
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        return (fold(old_parts), fold(new_parts))
+        return (_union_all(old_parts), _union_all(new_parts))
 
     def files(self, version: int | None = None) -> list[dict]:
         """Manifest-level file listing (Iceberg's ``files`` metadata
@@ -5610,6 +5609,18 @@ class LakehouseCatalog:
         def cols(v):
             return [c.strip() for c in str(v).split(",")] if v else None
 
+        def refresh_args(need: str, shape: str):
+            """(target table, full_refresh flag) of a summary-refresh
+            procedure, which also needs the ``need`` argument."""
+            tgt_ref = named.get("target")
+            if not tgt_ref or "." not in str(tgt_ref):
+                raise ValueError(f"{proc} needs target => 'ns.table'")
+            if not named.get(need):
+                raise ValueError(f"{proc} needs {need} => '{shape}'")
+            tns, tname = str(tgt_ref).split(".", 1)
+            full = str(named.get("full_refresh", "")).lower() == "true"
+            return self.table(tns, tname), full
+
         if proc == "rewrite_data_files":
             v = t.compact(
                 sort_by=cols(named.get("sort_order")),
@@ -5644,24 +5655,13 @@ class LakehouseCatalog:
                 refresh_rollup,
             )
 
-            tgt_ref = named.get("target")
-            if not tgt_ref or "." not in str(tgt_ref):
-                raise ValueError(
-                    "refresh_rollup needs target => 'ns.table'"
-                )
-            gb = cols(named.get("group_by"))
-            if not gb:
-                raise ValueError(
-                    "refresh_rollup needs group_by => 'c1,c2'"
-                )
-            tns, tname = str(tgt_ref).split(".", 1)
+            dst, full = refresh_args("group_by", "c1,c2")
             v = refresh_rollup(
                 t,
-                self.table(tns, tname),
-                gb,
+                dst,
+                cols(named["group_by"]),
                 cols(named.get("sum")),
-                full_refresh=str(named.get("full_refresh", "")).lower()
-                == "true",
+                full_refresh=full,
             )
             return self._version_df(v)
         if proc == "remove_orphan_files":
@@ -5711,25 +5711,14 @@ class LakehouseCatalog:
                 refresh_hll_rollup,
             )
 
-            tgt_ref = named.get("target")
-            if not tgt_ref or "." not in str(tgt_ref):
-                raise ValueError(
-                    "refresh_hll_rollup needs target => 'ns.table'"
-                )
-            dcol = named.get("distinct")
-            if not dcol:
-                raise ValueError(
-                    "refresh_hll_rollup needs distinct => 'col'"
-                )
-            tns, tname = str(tgt_ref).split(".", 1)
+            dst, full = refresh_args("distinct", "col")
             v = refresh_hll_rollup(
                 t,
-                self.table(tns, tname),
+                dst,
                 cols(named.get("group_by")) or [],
-                str(dcol),
+                str(named["distinct"]),
                 lg_k=int(named.get("lg_k", 12)),
-                full_refresh=str(named.get("full_refresh", "")).lower()
-                == "true",
+                full_refresh=full,
             )
             return self._version_df(v)
         if proc == "refresh_quantile_sketch":
@@ -5737,25 +5726,14 @@ class LakehouseCatalog:
                 refresh_quantile_sketch,
             )
 
-            tgt_ref = named.get("target")
-            if not tgt_ref or "." not in str(tgt_ref):
-                raise ValueError(
-                    "refresh_quantile_sketch needs target => 'ns.table'"
-                )
-            val = named.get("value")
-            if not val:
-                raise ValueError(
-                    "refresh_quantile_sketch needs value => 'col'"
-                )
-            tns, tname = str(tgt_ref).split(".", 1)
+            dst, full = refresh_args("value", "col")
             v = refresh_quantile_sketch(
                 t,
-                self.table(tns, tname),
+                dst,
                 cols(named.get("group_by")) or [],
-                str(val),
+                str(named["value"]),
                 alpha=float(named.get("alpha", "0.01")),
-                full_refresh=str(named.get("full_refresh", "")).lower()
-                == "true",
+                full_refresh=full,
             )
             return self._version_df(v)
         if proc == "pagerank":

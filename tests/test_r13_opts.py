@@ -15,12 +15,10 @@ from spark_iceberg_schema_evolution_spark.operators.dedup import (
     normalized_words,
     shingles,
 )
-from spark_iceberg_schema_evolution_spark.operators.evolve import align_schema
 from spark_iceberg_schema_evolution_spark.operators.profile import profile_stats
 from spark_iceberg_schema_evolution_spark.operators.text import chunk_text
 from spark_iceberg_schema_evolution_spark.plans import explain
 from spark_iceberg_schema_evolution_spark.queries import load
-from spark_iceberg_schema_evolution_spark.tables import LakehouseCatalog
 from tests.conftest import SF_SMOKE
 
 
@@ -92,85 +90,6 @@ def test_profile_distinct_stays_hash_aggregate(spark):
     assert "HashAggregate" in plan  # ... and hash-aggregated again
 
 
-# --- scoped diff: exact equivalence with the generic path ------------------
-
-
-def _generic_diff(t, a, b):
-    to_snap = t._load(b)
-    old = align_schema(t.read(version=a), to_snap.schema, keep_extras=False)
-    new = t.read(version=b)
-    return (
-        new.exceptAll(old).withColumn("_change_type", F.lit("I"))
-    ).unionByName(old.exceptAll(new).withColumn("_change_type", F.lit("D")))
-
-
-def _symdiff(a, b) -> int:
-    return a.exceptAll(b).count() + b.exceptAll(a).count()
-
-
-def test_diff_scoped_equivalence_and_fallback(spark, tmp_path):
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-    )
-    t = cat.table("db", "p")
-    cat.write_evolving(
-        o.where("o_orderkey < 2000"), "db", "p",
-        partition_month_of="o_orderdate",
-    )
-    v1 = t._load().version
-    t.append(o.where("o_orderkey >= 2000 AND o_orderkey < 4000"))
-    v2 = t._load().version
-
-    # append-only span: scoped, I-only, and provably no old side
-    old_side, new_side = t._diff_scope(t._load(v1), t._load(v2))
-    assert old_side is None and new_side is not None
-    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
-    assert t.diff(v1, v2).where("_change_type = 'D'").count() == 0
-
-    # month-trimming COW DELETE: scoped and exact
-    t.delete_where("o_orderstatus = 'F'")
-    v3 = t._load().version
-    assert t._diff_scope(t._load(v2), t._load(v3)) is not None
-    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
-    # ... and the composed append+delete span too
-    assert _symdiff(t.diff(v1, v3), _generic_diff(t, v1, v3)) == 0
-
-    # COW UPDATE span: scoped and exact (D of old values, I of new)
-    t.update_where("o_totalprice > 100000", {"o_orderstatus": F.lit("X")})
-    v4 = t._load().version
-    assert _symdiff(t.diff(v3, v4), _generic_diff(t, v3, v4)) == 0
-
-    # MOR delete changes the delete-file set: MUST fall back
-    t.delete_where("o_orderkey < 100", mode="mor")
-    v5 = t._load().version
-    assert t._diff_scope(t._load(v4), t._load(v5)) is None
-    assert _symdiff(t.diff(v4, v5), _generic_diff(t, v4, v5)) == 0
-
-    # rename changes the rename log: MUST fall back
-    t.rename_column("o_orderstatus", "status")
-    v6 = t._load().version
-    assert t._diff_scope(t._load(v5), t._load(v6)) is None
-
-    # schema change: MUST fall back
-    t.add_column("extra", "string")
-    v7 = t._load().version
-    assert t._diff_scope(t._load(v6), t._load(v7)) is None
-
-
-def test_diff_empty_span_scoped(spark, tmp_path):
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    c = load(spark, SF_SMOKE, "customer").select("c_custkey", "c_name")
-    cat.write_evolving(c, "db", "t")
-    t = cat.table("db", "t")
-    v = t._load().version
-    d = t.diff(v, v)
-    assert d.count() == 0
-    assert d.columns[-1] == "_change_type"
-
-
 # --- hyperplane signature: one-expr parse == F.lit tree, bit-identical -----
 
 
@@ -231,98 +150,9 @@ def test_lit_double_array_sql_sci_notation_parses(spark):
     assert got == vals
 
 
-# --- diff(): recorded-DML predicate replay ---------------------------------
-
-
-def test_diff_dml_replay_exact_and_gated(spark, tmp_path):
-    """String-predicate COW DMLs record replayable provenance; diff()
-    over such spans re-evaluates the predicate against the pre-state
-    and must equal the generic four-scan diff EXACTLY — including an
-    update whose SET leaves some matched rows unchanged (the D'/I'
-    intersection must cancel), a composed multi-DML span, and an
-    unpartitioned table. Nondeterministic predicates must NOT record."""
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-    )
-    t = cat.table("db", "r")
-    cat.write_evolving(
-        o.where("o_orderkey < 3000"), "db", "r",
-        partition_month_of="o_orderdate",
-    )
-    v1 = t._load().version
-
-    # string-cond delete records provenance
-    t.delete_where("o_orderstatus = 'F'")
-    v2 = t._load().version
-    assert t._load(v2).dml == {
-        "op": "delete",
-        "cond": "o_orderstatus = 'F'",
-        "months": t._load(v2).dml["months"],
-    }
-    assert t._load(v2).dml["months"]  # partitioned: scope recorded
-    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
-
-    # string-SET update — including rows where SET is an identity
-    # (o_totalprice <= 0 never happens, so use a CASE that keeps some):
-    t.update_where(
-        "o_totalprice > 50000",
-        {"o_orderstatus": "CASE WHEN o_totalprice > 150000 "
-                          "THEN 'X' ELSE o_orderstatus END"},
-    )
-    v3 = t._load().version
-    rec = t._load(v3).dml
-    assert rec is not None and rec["op"] == "update" and rec["set"]
-    # matched rows below 150000 keep their value -> D' and I' overlap;
-    # the replayed diff must still equal the generic multiset exactly
-    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
-    # composed span: delete then update then an append
-    t.append(o.where("o_orderkey >= 3000 AND o_orderkey < 3500"))
-    v4 = t._load().version
-    assert _symdiff(t.diff(v1, v4), _generic_diff(t, v1, v4)) == 0
-
-    # nondeterministic predicate: must not record, diff still correct
-    t.delete_where("o_totalprice * rand() < 0.0001")
-    v5 = t._load().version
-    assert t._load(v5).dml is None
-    assert _symdiff(t.diff(v4, v5), _generic_diff(t, v4, v5)) == 0
-
-    # Column (non-string) assignment: must not record
-    t.update_where("o_totalprice > 400000", {"o_orderstatus": F.lit("Z")})
-    v6 = t._load().version
-    assert t._load(v6).dml is None
-
-
-def test_diff_dml_replay_unpartitioned(spark, tmp_path):
-    cat = LakehouseCatalog(spark, str(tmp_path))
-    cat.create_namespace("db")
-    o = load(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    t = cat.table("db", "u")
-    t.create(o.schema)
-    t.append(o.where("o_orderkey < 4000"))
-    v1 = t._load().version
-    t.delete_where("o_orderstatus = 'F'")
-    v2 = t._load().version
-    rec = t._load(v2).dml
-    assert rec == {"op": "delete", "cond": "o_orderstatus = 'F'",
-                   "months": None}
-    # replay plans a D-only frame: no exceptAll in the plan at all
-    old_side, new_side = t._diff_scope(t._load(v1), t._load(v2))
-    assert new_side is None and old_side is not None
-    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
-    t.update_where("o_totalprice > 100000", {"o_totalprice":
-                                             "o_totalprice + 1"})
-    v3 = t._load().version
-    assert t._load(v3).dml["op"] == "update"
-    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
-    assert _symdiff(t.diff(v1, v3), _generic_diff(t, v1, v3)) == 0
-
-
 # --- batch 2: fused CC rounds, pair filter-before-dedup (the merge
-# source broadcast pin lives in tests/test_tables.py) ---
+# source broadcast pin and the scoped-diff and DML-replay pins live in
+# tests/test_tables.py) ---
 
 
 def test_connected_components_one_checkpoint_per_round(spark):

@@ -866,3 +866,143 @@ def test_topk_sketch_spill_marker_cannot_collide_with_items(spark):
     m = {r.item: (r.n, r.spill) for r in merged.collect()}
     assert m["__spill__"] == (14, 0)
     assert m[None] == (0, 2)
+
+
+# --- the shared bookmark protocol (operators/rollup.py::_refresh) -----------
+
+
+def test_refresh_quantile_sketch_appends_the_generic_diff_delta(
+    spark, catalog
+):
+    """Each sketch refresh appends exactly the signed bucket fold of
+    the generic ``diff()`` change bag over its span — the refresh reads
+    ``diff_additive``, whose unreduced I/D rows must fold to the same
+    buckets — over an append, a DELETE, an UPDATE, a compaction (no
+    row change: nothing appended) and a multi-commit span."""
+    from spark_iceberg_schema_evolution_spark.operators.profile import (
+        _sketch_exprs,
+        refresh_quantile_sketch,
+    )
+
+    catalog.create_namespace("db")
+    src = catalog.table("db", "gsrc")
+    dst = catalog.table("db", "gdst")
+    df = spark.range(200).select(
+        (F.col("id") % 2).alias("g"),
+        (F.col("id") * 3 + 1).cast("double").alias("v"),
+    )
+    src.create(df.schema)
+    src.append(df)
+    refresh_quantile_sketch(src, dst, ["g"], "v", alpha=0.01)
+
+    def reference(a, b):
+        v, sgn, idx = _sketch_exprs("v", 0.01)
+        signed = F.when(F.col("_change_type") == "I", 1).otherwise(-1)
+        return sorted(
+            tuple(r)
+            for r in src.diff(a, b)
+            .where(v.isNotNull())
+            .groupBy("g", sgn.alias("sgn"), idx.alias("bucket"))
+            .agg(F.sum(signed).alias("n"))
+            .where("n != 0")
+            .collect()
+        )
+
+    def refresh_and_check():
+        a = int(dst.properties()["sketch.source_version"])
+        before = dst._load().version
+        after = refresh_quantile_sketch(src, dst, ["g"], "v", alpha=0.01)
+        appended = sorted(
+            tuple(r)
+            for r in dst.read(version=after)
+            .exceptAll(dst.read(version=before))
+            .collect()
+        )
+        assert appended == reference(a, src._load().version)
+        return after - before
+
+    src.append(
+        spark.range(50).select(
+            (F.col("id") % 2).alias("g"),
+            (F.col("id") * 7 + 2).cast("double").alias("v"),
+        )
+    )
+    assert refresh_and_check() == 1
+    src.delete_where(F.col("v") > 400)
+    assert refresh_and_check() == 1
+    src.update_where(F.col("v") < 10, {"v": F.col("v") + 1000})
+    assert refresh_and_check() == 1
+    src.compact()
+    assert refresh_and_check() == 0
+    src.update_where("v > 1000", {"v": "v + 1"})
+    src.append(spark.createDataFrame([(1, 5.0), (0, -3.0)], "g long, v double"))
+    assert refresh_and_check() == 1
+
+
+def test_sketch_and_hll_refresh_refuse_foreign_write(spark, catalog):
+    """A foreign write to a sketch or HLL summary breaks its bookmark
+    pairing: the next refresh raises instead of folding on top."""
+    from spark_iceberg_schema_evolution_spark.operators.profile import (
+        refresh_hll_rollup,
+        refresh_quantile_sketch,
+    )
+
+    catalog.create_namespace("db")
+    src = catalog.table("db", "fsrc")
+    df = spark.range(40).select(
+        (F.col("id") % 2).alias("g"), F.col("id").alias("v")
+    )
+    src.create(df.schema)
+    src.append(df)
+    refreshers = {
+        "fsk": lambda d: refresh_quantile_sketch(src, d, ["g"], "v"),
+        "fhll": lambda d: refresh_hll_rollup(src, d, ["g"], "v"),
+    }
+    for name, refresh in refreshers.items():
+        dst = catalog.table("db", name)
+        refresh(dst)
+        dst.append(dst.read().limit(1))  # someone else writes the summary
+        src.append(spark.createDataFrame([(0, 99)], "g long, v long"))
+        with pytest.raises(RuntimeError, match="out of sync"):
+            refresh(dst)
+
+
+def test_refresh_append_span_job_counts(spark, catalog):
+    """Spark jobs of one refresh over an append span (2,000-row source,
+    100-row append), per summary: the delta's local checkpoint, with
+    the emptiness count (and HLL's delete count) riding it, plus the
+    write — a merge for the rollup, an append for the sketches. A
+    separate probe that re-ran the change lineage shows up here."""
+    from spark_iceberg_schema_evolution_spark.operators.profile import (
+        refresh_hll_rollup,
+        refresh_quantile_sketch,
+    )
+    from tests.conftest import _jobs_in
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 7).alias("g"),
+            (F.col("id") * 3 + 1).alias("v"),
+            (F.col("id") % 97).alias("u"),
+        )
+
+    catalog.create_namespace("db")
+    refreshers = {
+        "rollup": lambda s, d: refresh_rollup(s, d, ["g"], ["v"]),
+        "sketch": lambda s, d: refresh_quantile_sketch(s, d, ["g"], "v"),
+        "hll": lambda s, d: refresh_hll_rollup(s, d, ["g"], "u"),
+    }
+    jobs = {}
+    for name, refresh in refreshers.items():
+        src = catalog.table("db", f"j_{name}_src")
+        dst = catalog.table("db", f"j_{name}")
+        src.create(rows(0, 1).schema)
+        src.append(rows(0, 2000))
+        refresh(src, dst)
+        src.append(rows(2000, 2100))
+        v, ids = _jobs_in(
+            spark, f"refresh_{name}", lambda: refresh(src, dst)
+        )
+        assert v == dst._load().version
+        jobs[name] = len(ids)
+    assert jobs == {"rollup": 8, "sketch": 4, "hll": 4}

@@ -13,6 +13,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from spark_iceberg_schema_evolution_spark.operators.evolve import align_schema
 from spark_iceberg_schema_evolution_spark.queries import load
 from spark_iceberg_schema_evolution_spark.sources.csv_evolving import ingest_evolving_csvs
 from spark_iceberg_schema_evolution_spark.sources.fixtures import generate_csv_files
@@ -1664,6 +1665,28 @@ def test_dml_rejects_missing_condition(spark, catalog):
     with pytest.raises(ValueError, match="needs a condition"):
         t.update_where(None, {"v": "v + 1"})
     assert t._load().version == before
+
+
+def test_null_partition_timestamp_rows_read_back(spark, catalog):
+    # a NULL partition timestamp is written under the default-partition
+    # month, which reads back as a NULL month: every read must still
+    # return its rows, and a COW DELETE of another month must keep them
+    rows = spark.createDataFrame(
+        [
+            (1, datetime.datetime(2024, 1, 5)),
+            (2, None),
+            (3, datetime.datetime(2024, 2, 5)),
+        ],
+        "id long, ts timestamp",
+    )
+    catalog.write_evolving(rows, "db", "nts", partition_month_of="ts")
+    t = catalog.table("db", "nts")
+    assert "__HIVE_DEFAULT_PARTITION__" in t._load().batches[0]["months"]
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
+    assert t.row_count() == 3
+    t.delete_where("id = 1")
+    assert sorted(r.id for r in t.read().collect()) == [2, 3]
+    assert t.row_count() == 2
 
 
 def test_partition_evolution_overwrite_keeps_foreign_out_of_scope(
@@ -3408,3 +3431,224 @@ def test_merge_insert_broadcast_keys_distinct_on_dup_key_target(
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+# --- row-level diff: scoped and replayed spans equal the generic diff -----
+
+
+def _generic_diff(t, a, b):
+    to_snap = t._load(b)
+    old = align_schema(t.read(version=a), to_snap.schema, keep_extras=False)
+    new = t.read(version=b)
+    return (
+        new.exceptAll(old).withColumn("_change_type", F.lit("I"))
+    ).unionByName(old.exceptAll(new).withColumn("_change_type", F.lit("D")))
+
+
+def _symdiff(a, b) -> int:
+    return a.exceptAll(b).count() + b.exceptAll(a).count()
+
+
+def test_diff_scoped_equivalence_and_fallback(spark, tmp_path):
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    t = cat.table("db", "p")
+    cat.write_evolving(
+        o.where("o_orderkey < 2000"), "db", "p",
+        partition_month_of="o_orderdate",
+    )
+    v1 = t._load().version
+    t.append(o.where("o_orderkey >= 2000 AND o_orderkey < 4000"))
+    v2 = t._load().version
+
+    # append-only span: scoped, I-only, and provably no old side
+    old_side, new_side = t._diff_scope(t._load(v1), t._load(v2))
+    assert old_side is None and new_side is not None
+    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
+    assert t.diff(v1, v2).where("_change_type = 'D'").count() == 0
+
+    # month-trimming COW DELETE: scoped and exact
+    t.delete_where("o_orderstatus = 'F'")
+    v3 = t._load().version
+    assert t._diff_scope(t._load(v2), t._load(v3)) is not None
+    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
+    # ... and the composed append+delete span too
+    assert _symdiff(t.diff(v1, v3), _generic_diff(t, v1, v3)) == 0
+
+    # COW UPDATE span: scoped and exact (D of old values, I of new)
+    t.update_where("o_totalprice > 100000", {"o_orderstatus": F.lit("X")})
+    v4 = t._load().version
+    assert _symdiff(t.diff(v3, v4), _generic_diff(t, v3, v4)) == 0
+
+    # MOR delete changes the delete-file set: MUST fall back
+    t.delete_where("o_orderkey < 100", mode="mor")
+    v5 = t._load().version
+    assert t._diff_scope(t._load(v4), t._load(v5)) is None
+    assert _symdiff(t.diff(v4, v5), _generic_diff(t, v4, v5)) == 0
+
+    # rename changes the rename log: MUST fall back
+    t.rename_column("o_orderstatus", "status")
+    v6 = t._load().version
+    assert t._diff_scope(t._load(v5), t._load(v6)) is None
+
+    # schema change: MUST fall back
+    t.add_column("extra", "string")
+    v7 = t._load().version
+    assert t._diff_scope(t._load(v6), t._load(v7)) is None
+
+
+def test_diff_empty_span_scoped(spark, tmp_path):
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    c = load(spark, SF_SMOKE, "customer").select("c_custkey", "c_name")
+    cat.write_evolving(c, "db", "t")
+    t = cat.table("db", "t")
+    v = t._load().version
+    d = t.diff(v, v)
+    assert d.count() == 0
+    assert d.columns[-1] == "_change_type"
+
+
+def test_diff_dml_replay_exact_and_gated(spark, tmp_path):
+    """String-predicate COW DMLs record replayable provenance; diff()
+    over such spans re-evaluates the predicate against the pre-state
+    and must equal the generic four-scan diff EXACTLY — including an
+    update whose SET leaves some matched rows unchanged (the D'/I'
+    intersection must cancel), a composed multi-DML span, and an
+    unpartitioned table. Nondeterministic predicates must NOT record."""
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    t = cat.table("db", "r")
+    cat.write_evolving(
+        o.where("o_orderkey < 3000"), "db", "r",
+        partition_month_of="o_orderdate",
+    )
+    v1 = t._load().version
+
+    # string-cond delete records provenance
+    t.delete_where("o_orderstatus = 'F'")
+    v2 = t._load().version
+    assert t._load(v2).dml == {
+        "op": "delete",
+        "cond": "o_orderstatus = 'F'",
+        "months": t._load(v2).dml["months"],
+    }
+    assert t._load(v2).dml["months"]  # partitioned: scope recorded
+    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
+
+    # string-SET update — including rows where SET is an identity
+    # (o_totalprice <= 0 never happens, so use a CASE that keeps some):
+    t.update_where(
+        "o_totalprice > 50000",
+        {"o_orderstatus": "CASE WHEN o_totalprice > 150000 "
+                          "THEN 'X' ELSE o_orderstatus END"},
+    )
+    v3 = t._load().version
+    rec = t._load(v3).dml
+    assert rec is not None and rec["op"] == "update" and rec["set"]
+    # matched rows below 150000 keep their value -> D' and I' overlap;
+    # the replayed diff must still equal the generic multiset exactly
+    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
+    # composed span: delete then update then an append
+    t.append(o.where("o_orderkey >= 3000 AND o_orderkey < 3500"))
+    v4 = t._load().version
+    assert _symdiff(t.diff(v1, v4), _generic_diff(t, v1, v4)) == 0
+
+    # nondeterministic predicate: must not record, diff still correct
+    t.delete_where("o_totalprice * rand() < 0.0001")
+    v5 = t._load().version
+    assert t._load(v5).dml is None
+    assert _symdiff(t.diff(v4, v5), _generic_diff(t, v4, v5)) == 0
+
+    # Column (non-string) assignment: must not record
+    t.update_where("o_totalprice > 400000", {"o_orderstatus": F.lit("Z")})
+    v6 = t._load().version
+    assert t._load(v6).dml is None
+
+
+def test_diff_dml_replay_unpartitioned(spark, tmp_path):
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    o = load(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    t = cat.table("db", "u")
+    t.create(o.schema)
+    t.append(o.where("o_orderkey < 4000"))
+    v1 = t._load().version
+    t.delete_where("o_orderstatus = 'F'")
+    v2 = t._load().version
+    rec = t._load(v2).dml
+    assert rec == {"op": "delete", "cond": "o_orderstatus = 'F'",
+                   "months": None}
+    # replay plans a D-only frame: no exceptAll in the plan at all
+    old_side, new_side = t._diff_scope(t._load(v1), t._load(v2))
+    assert new_side is None and old_side is not None
+    assert _symdiff(t.diff(v1, v2), _generic_diff(t, v1, v2)) == 0
+    t.update_where("o_totalprice > 100000", {"o_totalprice":
+                                             "o_totalprice + 1"})
+    v3 = t._load().version
+    assert t._load(v3).dml["op"] == "update"
+    assert _symdiff(t.diff(v2, v3), _generic_diff(t, v2, v3)) == 0
+    assert _symdiff(t.diff(v1, v3), _generic_diff(t, v1, v3)) == 0
+
+
+# --- DML replay provenance is determinism-by-analysis ----------------------
+
+
+def test_dml_replay_refuses_nondeterministic_udf(spark, tmp_path):
+    """A nondeterministic REGISTERED UDF in a DML predicate passes the
+    regex denylist (it cannot know the name) but must be refused by the
+    analysis gate: no dml provenance recorded, diff() takes the generic
+    path and stays exact."""
+    import random
+
+    nd = F.udf(lambda: random.random(), "double").asNondeterministic()
+    spark.udf.register("r14_nd_rand", nd)
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    t = cat.table("db", "ndudf")
+    rows = spark.createDataFrame(
+        [(1, 5.0), (2, 15.0), (3, 25.0)], ["id", "amt"]
+    )
+    t.create(rows.schema)
+    v1 = t.append(rows)
+    # always true (rand in [0,1)), but nondeterministic BY ANALYSIS —
+    # the denylist regex does not match "r14_nd_rand"
+    v2 = t.delete_where("amt < 1000000 + r14_nd_rand()")
+    assert t._load(v2).dml is None  # provenance refused
+    d = {(r["id"], r["_change_type"]) for r in t.diff(v1, v2).collect()}
+    assert d == {(1, "D"), (2, "D"), (3, "D")}
+    # and a deterministic predicate still records provenance
+    t2 = cat.table("db", "detp")
+    t2.create(rows.schema)
+    t2.append(rows)
+    v3 = t2.delete_where("amt > 20.0")
+    assert t2._load(v3).dml == {
+        "op": "delete", "cond": "amt > 20.0", "months": None,
+    }
+
+
+def test_dml_replay_update_refuses_nondeterministic_udf_assignment(
+    spark, tmp_path
+):
+    import random
+
+    nd = F.udf(lambda: random.random(), "double").asNondeterministic()
+    spark.udf.register("r14_nd_rand2", nd)
+    cat = LakehouseCatalog(spark, str(tmp_path))
+    cat.create_namespace("db")
+    t = cat.table("db", "ndupd")
+    rows = spark.createDataFrame([(1, 5.0), (2, 15.0)], ["id", "amt"])
+    t.create(rows.schema)
+    t.append(rows)
+    v2 = t.update_where(
+        "amt > 10.0", {"amt": "amt + floor(r14_nd_rand2() * 0)"}
+    )
+    assert t._load(v2).dml is None
